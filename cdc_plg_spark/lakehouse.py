@@ -145,6 +145,7 @@ all data movement is Spark jobs.
 from __future__ import annotations
 
 import calendar
+import itertools
 import json
 import os
 import shutil
@@ -305,6 +306,78 @@ class Snapshot:
 
     def logical_partition_by(self) -> list[str]:
         return [self.logical(p) for p in (self.partition_by or [])]
+
+
+# Snapshot metadata attribute -> its key in meta actions and checkpoints
+# (defaults live on the dataclass fields).  Replay, checkpoints, RESTORE
+# and CLONE all go through this one table, so no path can drop a field:
+# a hand-listed rebuild once lost `checks`, letting a widening merge
+# commit rows that violate a CHECK constraint.
+_META_KEYS = {
+    "schema_json": "schema",
+    "key_col": "key_col",
+    "mapping": "column_mapping",
+    "retired": "retired_physical",
+    "partition_by": "partition_by",
+    "bloom_bits": "key_bloom_bits",
+    "checks": "checks",
+    "owns_root": "owns_root",
+    "protocol": "protocol",
+    "generated": "generated",
+    "defaults": "defaults",
+}
+
+
+def _meta_of(snap: Snapshot) -> dict:
+    """Every metadata field of `snap`, keyed as the log writes it."""
+    return {k: getattr(snap, a) for a, k in _META_KEYS.items()}
+
+
+def _apply_meta(snap: Snapshot, m: dict) -> None:
+    """Replay a checkpoint or meta action onto `snap`: a key `m` lacks
+    keeps its current value."""
+    for a, k in _META_KEYS.items():
+        if k in m:
+            setattr(snap, a, m[k])
+
+
+def _meta_action(**changes) -> dict:
+    """A meta action carrying only the named Snapshot attributes: replay
+    treats each meta action as a partial update, so unchanged fields
+    need not ride along."""
+    return {"meta": {_META_KEYS[a]: v for a, v in changes.items()}}
+
+
+# The manifest entry an add action records, beyond its path: stats and
+# layout (`partition`, the `bloom` sidecar, and `nonhive` — a non-hive
+# import whose manifest tuple is the sole partition authority), plus
+# the foreign-writer tripwires deep fsck checks: commit-time mtimes for
+# the data file and its sidecar (stamped by _try_commit) and the
+# OPTIONAL content-hash seals (stamp_hashes) that survive even an
+# os.utime mtime restore.
+_ENTRY_KEYS = ("rows", "bytes", "min_key", "max_key", "cols", "partition",
+               "bloom", "mtime_ns", "bloom_mtime_ns", "sha256",
+               "bloom_sha256", "nonhive")
+_MTIME_KEYS = ("mtime_ns", "bloom_mtime_ns")
+
+
+def _file_entry(a: dict, drop: tuple[str, ...] = ()) -> dict:
+    """The manifest entry of add action (or live entry) `a`, minus the
+    keys in `drop`; its deletion vector is not part of it."""
+    entry = {k: a[k] for k in _ENTRY_KEYS if k in a and k not in drop}
+    entry.setdefault("cols", {})
+    return entry
+
+
+def _readd_actions(entries, drop: tuple[str, ...] = ()) -> list[dict]:
+    """Add actions re-listing `(path, entry)` pairs, then the dv actions
+    their deletion vectors need: an add REPLACES the manifest entry on
+    replay, so a DV that did not ride along would resurrect deleted
+    rows."""
+    return ([{"add": {"path": p, **_file_entry(s, drop)}}
+             for p, s in entries]
+            + [{"dv": {"path": p, "keys": list(s["dv"])}}
+               for p, s in entries if s.get("dv")])
 
 
 def _checks_referencing(checks: dict[str, str], col: str) -> list[str]:
@@ -1007,17 +1080,7 @@ class TxLogTable:
                 data = json.load(f)
             snap.files = dict(data["files"])
             snap.txns = dict(data["txns"])
-            snap.schema_json = data.get("schema")
-            snap.key_col = data.get("key_col")
-            snap.mapping = data.get("column_mapping")
-            snap.retired = data.get("retired_physical", [])
-            snap.partition_by = data.get("partition_by")
-            snap.bloom_bits = data.get("key_bloom_bits", 0)
-            snap.checks = data.get("checks", {})
-            snap.owns_root = data.get("owns_root", False)
-            snap.protocol = data.get("protocol", [1, 1])
-            snap.generated = data.get("generated", {})
-            snap.defaults = data.get("defaults", {})
+            _apply_meta(snap, data)
             start = ckpts[-1] + 1
         for v in versions:
             if v < start or v > head:
@@ -1027,27 +1090,7 @@ class TxLogTable:
                     action = json.loads(line)
                     if "add" in action:
                         a = action["add"]
-                        snap.files[a["path"]] = {
-                            **{k: a[k] for k in ("rows", "bytes",
-                                                 "min_key", "max_key")},
-                            "cols": a.get("cols", {}),
-                            **({"partition": a["partition"]}
-                               if "partition" in a else {}),
-                            **({"bloom": a["bloom"]}
-                               if "bloom" in a else {}),
-                            # foreign-writer tripwires (deep fsck):
-                            # commit-time mtimes for the data file and
-                            # its bloom sidecar, plus the OPTIONAL
-                            # content-hash seal (stamp_hashes) that
-                            # survives even an os.utime mtime restore
-                            **{k: a[k] for k in (
-                                "mtime_ns", "bloom_mtime_ns",
-                                "sha256", "bloom_sha256") if k in a},
-                            # non-hive import: manifest tuple is the
-                            # sole partition authority, path carries
-                            # no k=v segments by design
-                            **({"nonhive": True}
-                               if a.get("nonhive") else {})}
+                        snap.files[a["path"]] = _file_entry(a)
                     elif "remove" in action:
                         snap.files.pop(action["remove"]["path"], None)
                     elif "dv" in action:
@@ -1064,23 +1107,7 @@ class TxLogTable:
                         prev = snap.txns.get(t["app"], -1)
                         snap.txns[t["app"]] = max(prev, int(t["epoch"]))
                     elif "meta" in action:
-                        m = action["meta"]
-                        snap.schema_json = m.get("schema", snap.schema_json)
-                        snap.key_col = m.get("key_col", snap.key_col)
-                        snap.mapping = m.get("column_mapping", snap.mapping)
-                        snap.retired = m.get("retired_physical",
-                                             snap.retired)
-                        snap.partition_by = m.get("partition_by",
-                                                  snap.partition_by)
-                        snap.bloom_bits = m.get("key_bloom_bits",
-                                                snap.bloom_bits)
-                        snap.checks = m.get("checks", snap.checks)
-                        snap.owns_root = m.get("owns_root",
-                                               snap.owns_root)
-                        snap.protocol = m.get("protocol", snap.protocol)
-                        snap.generated = m.get("generated",
-                                               snap.generated)
-                        snap.defaults = m.get("defaults", snap.defaults)
+                        _apply_meta(snap, action["meta"])
         if snap.protocol[0] > READER_VERSION:
             raise UnsupportedProtocolError(
                 f"table at {self.path!r} requires min_reader "
@@ -1147,27 +1174,61 @@ class TxLogTable:
         finally:
             os.unlink(tmp)
 
-    def _maybe_checkpoint(self, snap_after: Snapshot) -> None:
-        v = snap_after.version
-        if v > 0 and v % CHECKPOINT_EVERY == 0:
-            self._write_checkpoint(snap_after)
+    def _maybe_checkpoint(self, version: int) -> None:
+        # replays the log only when a checkpoint is due (1 commit in 10)
+        if version <= 0 or version % CHECKPOINT_EVERY:
+            return
+        try:
+            snap = self.snapshot(version)
+        except UnsupportedProtocolError:
+            return
+        # a floor above this client (upgrade_protocol with
+        # allow_unsupported) is left for a newer client to checkpoint:
+        # this one would write only the fields it knows
+        if snap.protocol[1] <= WRITER_VERSION:
+            self._write_checkpoint(snap)
 
     def _write_checkpoint(self, snap: Snapshot) -> None:
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.ckpt")
         with open(tmp, "w") as f:
             json.dump({"files": snap.files, "txns": snap.txns,
-                       "schema": snap.schema_json,
-                       "key_col": snap.key_col,
-                       "column_mapping": snap.mapping,
-                       "retired_physical": snap.retired,
-                       "partition_by": snap.partition_by,
-                       "key_bloom_bits": snap.bloom_bits,
-                       "checks": snap.checks,
-                       "owns_root": snap.owns_root,
-                       "protocol": snap.protocol,
-                       "generated": snap.generated,
-                       "defaults": snap.defaults}, f)
+                       **_meta_of(snap)}, f)
         os.replace(tmp, os.path.join(self.log_dir, _ckpt_name(snap.version)))
+
+    def _publish(self, version: int, actions: list[dict]) -> bool:
+        """Publish `actions` as `version`, then write the checkpoint if
+        one is due.  False = lost the race."""
+        if not self._try_commit(version, actions):
+            return False
+        self._maybe_checkpoint(version)
+        return True
+
+    def _commit(self, op: str, build, attempts: int | None = 5) -> dict:
+        """The optimistic commit loop every retrying writer runs.  Each
+        attempt replays a fresh snapshot, checks the writer floor and
+        calls `build(snap)`, which returns one of:
+
+        - a dict: a finished early-out result (txn replay, no-op),
+          returned as is;
+        - None: retry on a fresh snapshot (a benign race seen before
+          publishing);
+        - `(actions, result)`: publish at snap.version + 1; a won race
+          returns {"version": snap.version + 1, **result}, a lost one
+          retries.
+
+        ALTERs and merge try `attempts` times; append passes None and
+        retries without bound, since appends never conflict on data.
+        A `build` that finds its previous attempt's read set
+        invalidated raises ConflictError itself."""
+        for _ in itertools.count() if attempts is None else range(attempts):
+            snap = self.snapshot()
+            self._assert_writer(snap)
+            out = build(snap)
+            if isinstance(out, dict):
+                return out
+            if out is not None and self._publish(snap.version + 1, out[0]):
+                return {"version": snap.version + 1, **out[1]}
+        raise ConflictError(f"{op} retries exhausted")
 
     def _assert_writer(self, snap: Snapshot) -> None:
         """Every mutator calls this on its working snapshot: a table
@@ -1195,11 +1256,9 @@ class TxLogTable:
         exists for staged migrations (bump first, roll clients after)
         and for tests.  RESTORE never rewinds the protocol: restore's
         meta carries no protocol key, so replay keeps the floor."""
-        for _ in range(5):
-            snap = self.snapshot()
+        def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("upgrade_protocol on non-existent table")
-            self._assert_writer(snap)
             cur_r, cur_w = snap.protocol
             new_r = cur_r if min_reader is None else min_reader
             new_w = cur_w if min_writer is None else min_writer
@@ -1220,11 +1279,10 @@ class TxLogTable:
             actions = [{"commit": {"op": "UPGRADE_PROTOCOL",
                                    "from": snap.protocol,
                                    "to": [new_r, new_w]}},
-                       {"meta": {"protocol": [new_r, new_w]}}]
-            if self._try_commit(snap.version + 1, actions):
-                return {"version": snap.version + 1, "skipped": False,
-                        "protocol": [new_r, new_w]}
-        raise ConflictError("upgrade_protocol retries exhausted")
+                       _meta_action(protocol=[new_r, new_w])]
+            return actions, {"skipped": False, "protocol": [new_r, new_w]}
+
+        return self._commit("upgrade_protocol", build)
 
     def detail(self) -> dict:
         """DESCRIBE DETAIL: manifest-derived table facts — no data
@@ -2322,7 +2380,7 @@ class TxLogTable:
         df, gen_implicit = _apply_generated_ingest(df, snap.generated)
         _phys_memo: dict[str, str] = {}
 
-        def _schema_meta(s: "Snapshot") -> list[dict]:
+        def _schema_changes(s: "Snapshot") -> dict:
             # same schema contract as merge: every table column must be
             # present (a missing one would silently read back as NULL
             # under the pinned snapshot schema); extra columns widen
@@ -2337,52 +2395,48 @@ class TxLogTable:
             new_fields = [f_ for f_ in df.schema.fields
                           if f_.name not in {tf.name for tf in table_fields}]
             if not new_fields:
-                return []
+                return {}
             _assert_legal_columns([f_.name for f_ in new_fields],
                                   "append schema widening")
-            meta_d = {"schema": StructType(
-                table_fields + new_fields).json(), "key_col": s.key_col}
+            changes = {"schema_json": StructType(
+                table_fields + new_fields).json()}
             if s.mapping is not None:
-                meta_d["column_mapping"] = _extend_mapping(
+                changes["mapping"] = _extend_mapping(
                     s, new_fields, _phys_memo)
-                meta_d["retired_physical"] = s.retired
-            return [{"meta": meta_d}]
+            return changes
 
-        meta = _schema_meta(snap)
         mapping0 = dict(snap.mapping) if snap.mapping else None
-        write_mapping = (meta[0]["meta"].get("column_mapping", mapping0)
-                         if meta else mapping0)
         adds = self._write_data(df, snap.key_col, n_files,
-                                mapping=write_mapping,
+                                mapping=_schema_changes(snap).get(
+                                    "mapping", mapping0),
                                 partition_cols=snap.logical_partition_by(),
                                 bloom_bits=snap.bloom_bits,
                                 checks={**snap.checks, **gen_implicit})
-        while True:
-            actions = [{"commit": {"op": "APPEND"}}, *meta, *adds]
-            if txn is not None:
-                actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-            version = snap.version + 1
-            if self._try_commit(version, actions):
-                break
-            # appends never conflict on data; take the next slot — but
-            # recompute BOTH txn idempotence and the schema-widening
-            # meta from the fresh snapshot: a concurrent commit may
-            # have widened the schema with different columns, and
-            # re-publishing our stale meta would silently drop them
-            snap = self.snapshot()
-            self._assert_writer(snap)
-            if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-                return {"version": snap.version, "skipped": True}
-            if (dict(snap.mapping) if snap.mapping else None) != mapping0:
+
+        def build(s: Snapshot):
+            # appends never conflict on data; a lost race takes the
+            # next slot — but recomputes BOTH txn idempotence and the
+            # schema-widening meta from the fresh snapshot: a
+            # concurrent commit may have widened the schema with
+            # different columns, and re-publishing our stale meta
+            # would silently drop them
+            if txn is not None and s.txns.get(txn[0], -1) >= txn[1]:
+                return {"version": s.version, "skipped": True}
+            if (dict(s.mapping) if s.mapping else None) != mapping0:
                 # a concurrent RENAME/DROP changed the logical->physical
                 # mapping AFTER our files were written under the old
                 # one; committing them would mislabel columns
                 raise ConflictError(
                     "concurrent column ALTER during append; re-run")
-            meta = _schema_meta(snap)
-        self._maybe_checkpoint(self.snapshot(version))
-        return {"version": version, "files_added": len(adds),
-                "skipped": False}
+            changes = _schema_changes(s)
+            actions = [{"commit": {"op": "APPEND"}},
+                       *([_meta_action(**changes)] if changes else []),
+                       *adds]
+            if txn is not None:
+                actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
+            return actions, {"files_added": len(adds), "skipped": False}
+
+        return self._commit("append", build, attempts=None)
 
     def rename_column(self, old: str, new: str) -> dict:
         """ALTER TABLE RENAME COLUMN — a pure META commit (the RFC's
@@ -2393,9 +2447,7 @@ class TxLogTable:
         travel below this commit still shows the old name.  Streams
         that pinned the old schema need a restart (the §3.2 contract
         for non-additive DDL)."""
-        for _ in range(5):
-            snap = self.snapshot()
-            self._assert_writer(snap)
+        def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("rename on non-existent table")
             fields = StructType.fromJson(json.loads(snap.schema_json)).fields
@@ -2432,24 +2484,22 @@ class TxLogTable:
             schema = StructType([
                 StructField(new if f_.name == old else f_.name,
                             f_.dataType, f_.nullable) for f_ in fields])
-            key = new if snap.key_col == old else snap.key_col
+            changes = {"schema_json": schema.json(), "mapping": mapping}
+            if snap.key_col == old:
+                changes["key_col"] = new
+            if old in snap.defaults:
+                # DEFAULTs are keyed by logical name; a rename re-keys
+                # the entry (constant exprs reference no columns, so
+                # values carry)
+                changes["defaults"] = {(new if k == old else k): v
+                                       for k, v in snap.defaults.items()}
             actions = [
                 {"commit": {"op": "ALTER", "alter": "rename",
                             "from": old, "to": new}},
-                {"meta": {"schema": schema.json(), "key_col": key,
-                          "column_mapping": mapping,
-                          "retired_physical": snap.retired,
-                          # DEFAULTs are keyed by logical name; a
-                          # rename re-keys the entry (constant exprs
-                          # reference no columns, so values carry)
-                          **({"defaults": {(new if k == old else k): v
-                                           for k, v in
-                                           snap.defaults.items()}}
-                             if old in snap.defaults else {})}}]
-            if self._try_commit(snap.version + 1, actions):
-                self._maybe_checkpoint(self.snapshot(snap.version + 1))
-                return {"version": snap.version + 1}
-        raise ConflictError("rename retries exhausted")
+                _meta_action(**changes)]
+            return actions, {}
+
+        return self._commit("rename", build)
 
     def widen_column_type(self, name: str, new_type: str) -> dict:
         """ALTER TABLE ALTER COLUMN TYPE — LOSSLESS WIDENING ONLY, as
@@ -2477,9 +2527,7 @@ class TxLogTable:
         type is derived from the expression, not declared)."""
         from pyspark.sql.types import StructField, _parse_datatype_string
 
-        for _ in range(5):
-            snap = self.snapshot()
-            self._assert_writer(snap)
+        def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("widen on non-existent table")
             fields = StructType.fromJson(
@@ -2532,17 +2580,11 @@ class TxLogTable:
                 {"commit": {"op": "ALTER", "alter": "widen",
                             "column": name, "from": cur_t,
                             "to": new_type}},
-                {"meta": {"schema": schema.json(),
-                          "key_col": snap.key_col,
-                          "protocol": proto,
-                          **({"column_mapping": snap.mapping,
-                              "retired_physical": snap.retired}
-                             if snap.mapping is not None else {})}}]
-            if self._try_commit(snap.version + 1, actions):
-                self._maybe_checkpoint(self.snapshot(snap.version + 1))
-                return {"version": snap.version + 1, "skipped": False,
-                        "from": cur_t, "to": new_type}
-        raise ConflictError("widen retries exhausted")
+                _meta_action(schema_json=schema.json(), protocol=proto)]
+            return actions, {"skipped": False, "from": cur_t,
+                             "to": new_type}
+
+        return self._commit("widen", build)
 
     def add_column(self, name: str, dtype: str,
                    default: str | None = None) -> dict:
@@ -2622,38 +2664,31 @@ class TxLogTable:
                 raise ValueError(
                     f"default for {name!r} must be a constant "
                     f"expression castable to {dtype!r}: {e}") from None
-        for _ in range(5):
-            snap = self.snapshot()
-            self._assert_writer(snap)
+        def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("add_column on non-existent table")
             fields = StructType.fromJson(
                 json.loads(snap.schema_json)).fields
             if name in [f_.name for f_ in fields]:
                 raise ValueError(f"column {name!r} already exists")
-            mapping, retired = snap.mapping, snap.retired
-            if mapping is not None:
-                mapping = _extend_mapping(
-                    snap, [StructField(name, dt, True)])
             schema = StructType([*fields, StructField(name, dt, True)])
-            meta_d = {"schema": schema.json(), "key_col": snap.key_col,
-                      **({"column_mapping": mapping,
-                          "retired_physical": retired}
-                         if mapping is not None else {})}
+            changes = {"schema_json": schema.json()}
+            if snap.mapping is not None:
+                changes["mapping"] = _extend_mapping(
+                    snap, [StructField(name, dt, True)])
             if default is not None:
-                meta_d["defaults"] = {**snap.defaults, name: default}
-                meta_d["protocol"] = [snap.protocol[0],
-                                      max(snap.protocol[1], 2)]
+                changes["defaults"] = {**snap.defaults, name: default}
+                changes["protocol"] = [snap.protocol[0],
+                                       max(snap.protocol[1], 2)]
             actions = [
                 {"commit": {"op": "ALTER", "alter": "add_column",
                             "column": name, "type": dtype,
                             **({"default": default}
                                if default is not None else {})}},
-                {"meta": meta_d}]
-            if self._try_commit(snap.version + 1, actions):
-                self._maybe_checkpoint(self.snapshot(snap.version + 1))
-                return {"version": snap.version + 1}
-        raise ConflictError("add_column retries exhausted")
+                _meta_action(**changes)]
+            return actions, {}
+
+        return self._commit("add_column", build)
 
     def add_check(self, name: str, expr: str) -> dict:
         """ALTER TABLE ADD CONSTRAINT ... CHECK (expr): validates the
@@ -2667,9 +2702,7 @@ class TxLogTable:
         if name.startswith("_generated_"):
             raise ValueError(f"constraint name {name!r} uses the "
                              f"reserved '_generated_' prefix")
-        for _ in range(5):
-            snap = self.snapshot()
-            self._assert_writer(snap)
+        def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("add_check on non-existent table")
             if name in snap.checks:
@@ -2680,25 +2713,17 @@ class TxLogTable:
             if bad:
                 raise CheckViolation(
                     f"existing rows violate {name!r}: {bad[0]}")
-            checks = {**snap.checks, name: expr}
             actions = [
                 {"commit": {"op": "ALTER", "alter": "add_check",
                             "name": name}},
-                {"meta": {"schema": snap.schema_json,
-                          "key_col": snap.key_col, "checks": checks,
-                          **({"column_mapping": snap.mapping,
-                              "retired_physical": snap.retired}
-                             if snap.mapping is not None else {})}}]
-            if self._try_commit(snap.version + 1, actions):
-                self._maybe_checkpoint(self.snapshot(snap.version + 1))
-                return {"version": snap.version + 1}
-        raise ConflictError("add_check retries exhausted")
+                _meta_action(checks={**snap.checks, name: expr})]
+            return actions, {}
+
+        return self._commit("add_check", build)
 
     def drop_check(self, name: str) -> dict:
         """ALTER TABLE DROP CONSTRAINT — pure meta commit."""
-        for _ in range(5):
-            snap = self.snapshot()
-            self._assert_writer(snap)
+        def build(snap: Snapshot):
             if name not in snap.checks:
                 raise ValueError(f"no constraint {name!r} "
                                  f"(have {sorted(snap.checks)})")
@@ -2706,15 +2731,10 @@ class TxLogTable:
             actions = [
                 {"commit": {"op": "ALTER", "alter": "drop_check",
                             "name": name}},
-                {"meta": {"schema": snap.schema_json,
-                          "key_col": snap.key_col, "checks": checks,
-                          **({"column_mapping": snap.mapping,
-                              "retired_physical": snap.retired}
-                             if snap.mapping is not None else {})}}]
-            if self._try_commit(snap.version + 1, actions):
-                self._maybe_checkpoint(self.snapshot(snap.version + 1))
-                return {"version": snap.version + 1}
-        raise ConflictError("drop_check retries exhausted")
+                _meta_action(checks=checks)]
+            return actions, {}
+
+        return self._commit("drop_check", build)
 
     def drop_column(self, name: str) -> dict:
         """ALTER TABLE DROP COLUMN — a pure META commit: the column
@@ -2725,9 +2745,7 @@ class TxLogTable:
         rewrite purges them — exactly the public Delta column-mapping
         contract.  Dropping the key column is refused (every format
         invariant hangs off it)."""
-        for _ in range(5):
-            snap = self.snapshot()
-            self._assert_writer(snap)
+        def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("drop on non-existent table")
             if name == snap.key_col:
@@ -2758,23 +2776,20 @@ class TxLogTable:
             mapping = dict(snap.mapping or {n: n for n in names})
             retired = [*snap.retired, mapping.pop(name)]
             schema = StructType([f_ for f_ in fields if f_.name != name])
+            changes = {"schema_json": schema.json(), "mapping": mapping,
+                       "retired": retired}
+            if name in snap.defaults:
+                # a dropped column's DEFAULT goes with it (re-adding
+                # the name starts clean)
+                changes["defaults"] = {k: v for k, v in
+                                       snap.defaults.items() if k != name}
             actions = [
                 {"commit": {"op": "ALTER", "alter": "drop",
                             "column": name}},
-                {"meta": {"schema": schema.json(),
-                          "key_col": snap.key_col,
-                          "column_mapping": mapping,
-                          "retired_physical": retired,
-                          # a dropped column's DEFAULT goes with it
-                          # (re-adding the name starts clean)
-                          **({"defaults": {k: v for k, v in
-                                           snap.defaults.items()
-                                           if k != name}}
-                             if name in snap.defaults else {})}}]
-            if self._try_commit(snap.version + 1, actions):
-                self._maybe_checkpoint(self.snapshot(snap.version + 1))
-                return {"version": snap.version + 1}
-        raise ConflictError("drop retries exhausted")
+                _meta_action(**changes)]
+            return actions, {}
+
+        return self._commit("drop", build)
 
     def _candidate_files(self, snap: Snapshot, source: DataFrame,
                          key_col: str) -> list[str]:
@@ -2921,11 +2936,22 @@ class TxLogTable:
         `fsck(verify_hashes=True)` audits exactly the still-sealed
         set.  Pinned by test_merge_sheds_seals_by_contract.
         """
-        for _ in range(5):
-            snap = self.snapshot()
-            self._assert_writer(snap)
+        read_dvs: dict[str, list] = {}   # last attempt's candidates' DVs
+
+        def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("merge into non-existent table")
+            # after a lost race the retry is valid iff no candidate file
+            # was removed AND no candidate file's deletion vector grew
+            # (our rewrite read the old DV state — re-committing would
+            # resurrect concurrently dv-deleted rows); plain appends
+            # interleaved, so recompute against the new snapshot
+            if any(p not in snap.files
+                   or snap.files[p].get("dv", []) != dv
+                   for p, dv in read_dvs.items()):
+                raise ConflictError(
+                    "concurrent commit removed or dv-deleted from a "
+                    "candidate file")
             if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
                 return {"version": snap.version, "skipped": True}
             key = snap.key_col
@@ -3067,40 +3093,28 @@ class TxLogTable:
                 merged, key, n_files, mapping=snap.mapping,
                 partition_cols=snap.logical_partition_by(),
                 bloom_bits=snap.bloom_bits, checks=snap.checks)
-            meta_d = {"schema": schema_json, "key_col": key}
-            if new_fields and snap.mapping is not None:
-                meta_d["column_mapping"] = snap.mapping
-                meta_d["retired_physical"] = snap.retired
+            widening = {}
+            if new_fields:
+                widening["schema_json"] = schema_json
+                if snap.mapping is not None:
+                    widening["mapping"] = snap.mapping
             actions = [{"commit": {"op": "MERGE",
                                    "files_pruned":
                                        len(snap.files) - len(touched),
                                    "files_rewritten": len(touched)}},
-                       *([{"meta": meta_d}] if new_fields
-                         else []),
+                       *([_meta_action(**widening)] if widening else []),
                        *[{"remove": {"path": p}} for p in touched],
                        *adds]
             if txn is not None:
                 actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-            if self._try_commit(snap.version + 1, actions):
-                self._maybe_checkpoint(self.snapshot(snap.version + 1))
-                return {"version": snap.version + 1,
-                        "files_scanned": len(touched),
-                        "files_pruned": len(snap.files) - len(touched),
-                        "files_added": len(adds), "skipped": False}
-            # lost the race: valid iff no candidate file was removed
-            # AND no candidate file's deletion vector grew (our rewrite
-            # read the old DV state — re-committing would resurrect
-            # concurrently dv-deleted rows)
-            newer = self.snapshot()
-            if any(p not in newer.files
-                   or newer.files[p].get("dv", [])
-                   != snap.files[p].get("dv", [])
-                   for p in touched):
-                raise ConflictError(
-                    "concurrent commit removed or dv-deleted from a "
-                    "candidate file")
-            # plain appends interleaved — recompute against new snapshot
-        raise ConflictError("merge retries exhausted")
+            read_dvs.clear()
+            read_dvs.update((p, snap.files[p].get("dv", []))
+                            for p in touched)
+            return actions, {"files_scanned": len(touched),
+                             "files_pruned": len(snap.files) - len(touched),
+                             "files_added": len(adds), "skipped": False}
+
+        return self._commit("merge", build)
 
     def _classify_pred_files(self, snap: Snapshot, where_between):
         """Classify live files against ANDed range predicates.
@@ -3297,9 +3311,8 @@ class TxLogTable:
             actions += adds
         if txn is not None:
             actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-        if not self._try_commit(snap.version + 1, actions):
+        if not self._publish(snap.version + 1, actions):
             raise ConflictError("concurrent commit during delete")
-        self._maybe_checkpoint(self.snapshot(snap.version + 1))
         return {"version": snap.version + 1, "skipped": False,
                 "files_dropped": len(drop_whole),
                 "files_rewritten": 0 if mode == "dv" else len(straddle)}
@@ -3355,55 +3368,31 @@ class TxLogTable:
                 f"cannot restore to version {version}: {len(missing)} "
                 f"file(s) (or bloom sidecars) vacuumed, "
                 f"e.g. {missing[0]!r}")
-        adds, dvs = [], []
-        for p, s in sorted(old.files.items()):
-            a = {"path": p,
-                 **{k: s[k] for k in ("rows", "bytes",
-                                      "min_key", "max_key")},
-                 "cols": s.get("cols", {})}
-            if "partition" in s:
-                a["partition"] = s["partition"]
-            if "bloom" in s:
-                a["bloom"] = s["bloom"]
-            if s.get("nonhive"):
-                a["nonhive"] = True   # layout marker survives restore
-            # content-hash seals survive restore: the bytes on disk
-            # are untouched, so the seal stays valid (mtimes are NOT
-            # carried — _try_commit re-stamps from the live file)
-            a.update({k: s[k] for k in ("sha256", "bloom_sha256")
-                      if k in s})
-            adds.append({"add": a})
-            if s.get("dv"):
-                dvs.append({"dv": {"path": p, "keys": list(s["dv"])}})
-        meta = {"schema": old.schema_json, "key_col": old.key_col,
-                "column_mapping": old.mapping,
-                "retired_physical": sorted(set(snap.retired)
-                                           | set(old.retired)),
-                "partition_by": old.partition_by,
-                "key_bloom_bits": old.bloom_bits,
-                "checks": old.checks,
-                "owns_root": snap.owns_root or old.owns_root,
-                # generated is fixed at create, so old == head; carried
-                # explicitly so a restore commit's meta stays complete
-                "generated": old.generated,
-                # defaults rewind with the schema they belong to (a
-                # post-restore-point add_column's default must not
-                # survive its column's disappearance)
-                "defaults": old.defaults}
+        # layout markers and content-hash seals survive restore: the
+        # bytes on disk are untouched, so the seal stays valid (mtimes
+        # are NOT carried — _try_commit re-stamps from the live file)
+        readds = _readd_actions(sorted(old.files.items()), _MTIME_KEYS)
+        # the whole meta rewinds — defaults with the schema they belong
+        # to — except: the protocol (no key, so replay keeps the
+        # floor), retired physical names (the union: a name is never
+        # reused) and root ownership (ever owned stays owned)
+        meta = _meta_of(_dc_replace(
+            old, retired=sorted(set(snap.retired) | set(old.retired)),
+            owns_root=snap.owns_root or old.owns_root))
+        del meta["protocol"]
         actions = [{"commit": {"op": "RESTORE", "to_version": version,
                                "files_removed": len(snap.files),
-                               "files_restored": len(adds)}},
+                               "files_restored": len(old.files)}},
                    {"meta": meta},
                    *[{"remove": {"path": p}} for p in snap.files],
-                   *adds, *dvs]
+                   *readds]
         if txn is not None:
             actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-        if not self._try_commit(snap.version + 1, actions):
+        if not self._publish(snap.version + 1, actions):
             raise ConflictError("concurrent commit during restore")
-        self._maybe_checkpoint(self.snapshot(snap.version + 1))
         return {"version": snap.version + 1, "skipped": False,
                 "files_removed": len(snap.files),
-                "files_restored": len(adds)}
+                "files_restored": len(old.files)}
 
     def clone(self, dest: str, version: int | None = None,
               deep: bool = False) -> "TxLogTable":
@@ -3472,7 +3461,7 @@ class TxLogTable:
                 f"file(s) (or bloom sidecars) vacuumed, "
                 f"e.g. {missing[0]!r}")
         t = TxLogTable(self.spark, dst_root)
-        adds, dvs = [], []
+        entries = []
         copy_jobs: list[tuple[str, str, bool]] = []
         for i, (p, s) in enumerate(sorted(snap.files.items())):
             src_abs = self._abs(p)
@@ -3497,27 +3486,8 @@ class TxLogTable:
                 path = os.path.relpath(dst_abs, dst_root)
             else:
                 path = src_abs
-            a = {"path": path,
-                 **{k: s[k] for k in ("rows", "bytes",
-                                      "min_key", "max_key")},
-                 "cols": s.get("cols", {})}
-            if "partition" in s:
-                a["partition"] = s["partition"]
-            if "bloom" in s:
-                a["bloom"] = s["bloom"]
-            if nonhive:
-                a["nonhive"] = True
-            # content-hash seals survive BOTH clone flavors: shallow
-            # references the same bytes, deep copies byte-identically,
-            # so sha256(content) is unchanged either way (mtimes are
-            # re-stamped fresh by _try_commit — a deep-clone copy is a
-            # new file)
-            a.update({k: s[k] for k in ("sha256", "bloom_sha256")
-                      if k in s})
-            adds.append({"add": a})
-            if s.get("dv"):
-                dvs.append({"dv": {"path": path,
-                                   "keys": list(s["dv"])}})
+            entries.append((path, {**s, "nonhive": True} if nonhive
+                            else s))
         if len(copy_jobs) >= _CLONE_DISTRIBUTE_MIN:
             # ONE job, each task copies its own files file-to-file on
             # shared storage; any task failure aborts before commit
@@ -3528,23 +3498,19 @@ class TxLogTable:
         else:
             for job in copy_jobs:
                 _clone_copy_job(job)
-        meta = {"schema": snap.schema_json, "key_col": snap.key_col,
-                "column_mapping": snap.mapping,
-                "retired_physical": snap.retired,
-                "partition_by": snap.partition_by,
-                "key_bloom_bits": snap.bloom_bits,
-                "checks": snap.checks,
-                # deep clones of a converted table replicate root-level
-                # rel paths, so they own their root like the source
-                # did; a shallow clone's root holds only log + data/
-                "owns_root": snap.owns_root if deep else False,
-                "generated": snap.generated,
-                "defaults": snap.defaults,
-                "protocol": snap.protocol}
+        # deep clones of a converted table replicate root-level rel
+        # paths, so they own their root like the source did; a shallow
+        # clone's root holds only log + data/
+        meta = _meta_of(_dc_replace(
+            snap, owns_root=snap.owns_root if deep else False))
+        # content-hash seals survive BOTH clone flavors: shallow
+        # references the same bytes, deep copies byte-identically, so
+        # sha256(content) is unchanged either way (mtimes are re-stamped
+        # fresh by _try_commit — a deep-clone copy is a new file)
         actions = [{"commit": {"op": "CLONE", "source": src_root,
                                "source_version": snap.version,
                                "deep": deep}},
-                   {"meta": meta}, *adds, *dvs]
+                   {"meta": meta}, *_readd_actions(entries, _MTIME_KEYS)]
         if not t._try_commit(0, actions):
             raise ConflictError(f"concurrent create at {dest}")
         return t
@@ -3822,9 +3788,8 @@ class TxLogTable:
                    *adds]
         if txn is not None:
             actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-        if not self._try_commit(snap.version + 1, actions):
+        if not self._publish(snap.version + 1, actions):
             raise ConflictError("concurrent commit during optimize")
-        self._maybe_checkpoint(self.snapshot(snap.version + 1))
         return {"version": snap.version + 1,
                 "files_compacted": len(small), "files_out": len(adds),
                 "skipped": False}
@@ -3886,21 +3851,15 @@ class TxLogTable:
             bloom_bits=snap.bloom_bits)
         if verify and adds:
             self._verify_layout_rewrite(df, snap, adds, "REPARTITION")
-        meta = {"schema": snap.schema_json, "key_col": snap.key_col,
-                "partition_by": phys_pb or None}
-        if snap.mapping is not None:
-            meta["column_mapping"] = snap.mapping
-            meta["retired_physical"] = snap.retired
         actions = [{"commit": {"op": "REPARTITION",
                                "partition_by": phys_pb}},
-                   {"meta": meta},
+                   _meta_action(partition_by=phys_pb or None),
                    *[{"remove": {"path": p}} for p in snap.files],
                    *adds]
         if txn is not None:
             actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-        if not self._try_commit(snap.version + 1, actions):
+        if not self._publish(snap.version + 1, actions):
             raise ConflictError("concurrent commit during repartition")
-        self._maybe_checkpoint(self.snapshot(snap.version + 1))
         return {"version": snap.version + 1,
                 "files_rewritten": len(snap.files),
                 "files_out": len(adds), "skipped": False}
@@ -4082,11 +4041,9 @@ class TxLogTable:
         byte-level audit, same O as deep fsck's footer+bloom pass is
         O(files).  Run it after bulk loads or on a schedule, not per
         commit."""
-        for _ in range(5):
-            snap = self.snapshot()
+        def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("stamp_hashes on non-existent table")
-            self._assert_writer(snap)
             live = sorted(snap.files.items())
             if not live:
                 return {"version": snap.version, "skipped": True,
@@ -4114,7 +4071,7 @@ class TxLogTable:
                         f"cannot seal: {len(still)} live file(s) "
                         f"missing on disk, e.g. {still[0]!r} — run "
                         f"fsck")
-                continue
+                return None
             hashes = self._hash_files(paths)
             unreadable = sorted(
                 p for p, v in hashes.items()
@@ -4135,43 +4092,23 @@ class TxLogTable:
                 # a live file vanished mid-pass: a concurrent
                 # cow-delete + vacuum got it, and that delete's commit
                 # bumps the version — retry on a fresh snapshot
-                continue
-            adds, dvs, n_side = [], [], 0
-            for p, s in live:
-                full = self._abs(p)
-                a = {"path": p,
-                     **{k: s[k] for k in ("rows", "bytes",
-                                          "min_key", "max_key")},
-                     "cols": s.get("cols", {}),
-                     **({"partition": s["partition"]}
-                        if "partition" in s else {}),
-                     **({"bloom": s["bloom"]} if "bloom" in s else {}),
-                     **({"nonhive": True} if s.get("nonhive") else {}),
-                     # mtimes carried as-is: the file is untouched, so
-                     # the original commit-time stamp stays the truth
-                     **{k: s[k] for k in ("mtime_ns", "bloom_mtime_ns")
-                        if k in s},
-                     "sha256": hashes[full]}
-                if s.get("bloom"):
-                    a["bloom_sha256"] = hashes[full + ".bloom"]
-                    n_side += 1
-                adds.append({"add": a})
-                if s.get("dv"):
-                    # an add REPLACES the manifest entry on replay, so
-                    # the deletion vector must ride along or the stamp
-                    # commit would resurrect deleted rows
-                    dvs.append({"dv": {"path": p,
-                                       "keys": list(s["dv"])}})
+                return None
+            # mtimes carried as-is: the file is untouched, so the
+            # original commit-time stamp stays the truth
+            sealed = [(p, {**s, "sha256": hashes[self._abs(p)],
+                           **({"bloom_sha256":
+                               hashes[self._abs(p) + ".bloom"]}
+                              if s.get("bloom") else {})})
+                      for p, s in live]
+            n_side = sum(1 for _, s in live if s.get("bloom"))
             actions = [{"commit": {"op": "STAMP_HASHES",
                                    "files": len(live),
                                    "sidecars": n_side}},
-                       *adds, *dvs]
-            if self._try_commit(snap.version + 1, actions):
-                self._maybe_checkpoint(self.snapshot(snap.version + 1))
-                return {"version": snap.version + 1, "skipped": False,
-                        "files_stamped": len(live),
-                        "sidecars_stamped": n_side}
-        raise ConflictError("stamp_hashes retries exhausted")
+                       *_readd_actions(sealed)]
+            return actions, {"skipped": False, "files_stamped": len(live),
+                             "sidecars_stamped": n_side}
+
+        return self._commit("stamp_hashes", build)
 
     # ------------------------------------------------------------ fsck
 

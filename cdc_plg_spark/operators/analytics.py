@@ -123,9 +123,12 @@ def analytics_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Linear per user; no self-join."""
     ev = load_table(spark, "events", sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+    # microsecond gap: unix_timestamp truncates to whole seconds, so a
+    # 1800.5 s gap would not split the session its oracle's epoch() splits
+    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
     marked = ev.withColumn(
-        "new_s", F.when(gap > 1800, 1).when(gap.isNull(), 1).otherwise(0))
+        "new_s", F.when(gap > 1800 * 1_000_000, 1)
+        .when(gap.isNull(), 1).otherwise(0))
     wsum = (Window.partitionBy("user_id").orderBy("ts", "event_id")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     sess = marked.withColumn("session_id", F.sum("new_s").over(wsum))
