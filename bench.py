@@ -31,7 +31,7 @@ from concurrent.futures import ThreadPoolExecutor
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
 
 # Headline set: one representative per engine area (batch relational,
@@ -107,35 +107,24 @@ def _median_time(fn, n=N_RUNS):
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from cdc_plg_spark.session import get_spark
 
-    builder = (SparkSession.builder
-               .master(f"local[{CPUS}]")
-               .appName("cdc-plg-spark-bench"))
+    # throughput run submits 22 jobs at once.  FAIR alone is not enough:
+    # without a pool per submitter every job lands in the default pool,
+    # whose internal mode is FIFO — so the workload runner below also
+    # sets spark.scheduler.pool per thread (dynamically-created pools
+    # fair-share against each other with weight 1, no allocation file
+    # needed).
+    confs = {"spark.scheduler.mode": "FAIR"}
     # scale-soak knob (scripts/scale_soak docs): the driver's sf0.1
     # files are single-row-group so the default 128m split is moot, but
     # the generated sfN fixtures carry many row groups and the scan
     # should fan out across them — a per-deployment conf in production
     mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
     if mpb:
-        builder = builder.config("spark.sql.files.maxPartitionBytes", mpb)
-    spark = (builder
-             .config("spark.sql.shuffle.partitions", CPUS)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             # throughput run submits 22 jobs at once.  FAIR alone is not
-             # enough: without a pool per submitter every job lands in the
-             # default pool, whose internal mode is FIFO — so the workload
-             # runner below also sets spark.scheduler.pool per thread
-             # (dynamically-created pools fair-share against each other
-             # with weight 1, no allocation file needed).
-             .config("spark.scheduler.mode", "FAIR")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-             .getOrCreate())
+        confs["spark.sql.files.maxPartitionBytes"] = mpb
+    spark = get_spark("cdc-plg-spark-bench", master=f"local[{CPUS}]",
+                      extra_confs=confs)
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_plg_spark import registry

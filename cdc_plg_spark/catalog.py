@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_plg_spark.session import ensure_session_confs
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -25,28 +27,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # timestamp type, so session.py sets nanosAsLong and we rebuild a µs
 # TimestampType here (fixture values are µs-precision; see FIXTURES.md).
 _NANOS_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
-
-
-# Session confs the engine depends on regardless of who built the
-# SparkSession (the driver harness passes its own): every entry is a
-# dynamic SQL conf, settable at runtime.
-_REQUIRED_RUNTIME_CONFS = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # fixture timestamps are µs isAdjustedToUTC=false: read as plain
-    # TimestampType (not NTZ) so event-time ops and pushdown both work
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.adaptive.enabled": "true",
-    # engine semantics are permissive-SQL (Spark 4 defaults ANSI on;
-    # oracle parity and hash wraparound both assume non-ANSI)
-    "spark.sql.ansi.enabled": "false",
-    # size shuffles to the box, not Spark's 200 default: AQE coalesces
-    # batch plans anyway, but STREAMING aggs lock the state fan-out to
-    # this value at first checkpoint — 200 near-empty state partitions
-    # per query is pure overhead at fixture scale (scale runs override
-    # per deployment)
-    "spark.sql.shuffle.partitions": str(os.cpu_count() or 32),
-}
 
 
 def _is_utc_equivalent(tz: str) -> bool:
@@ -77,15 +57,6 @@ def _is_utc_equivalent(tz: str) -> bool:
     probes = [datetime(y, mth, 1, tzinfo=timezone.utc)
               for y in (1992, 1998, 2020, 2026) for mth in (1, 7)]
     return all(zone.utcoffset(dt) == timedelta(0) for dt in probes)
-
-
-def ensure_session_confs(spark: SparkSession) -> None:
-    for k, v in _REQUIRED_RUNTIME_CONFS.items():
-        try:
-            if spark.conf.get(k, None) != v:
-                spark.conf.set(k, v)
-        except Exception:
-            pass
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

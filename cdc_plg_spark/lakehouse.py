@@ -157,6 +157,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from cdc_plg_spark.session import ensure_session_confs
+
 CHECKPOINT_EVERY = 10
 _LOG_DIR = "_txlog"
 _PAD = 20
@@ -1410,14 +1412,8 @@ class TxLogTable:
                 for f_ in df.schema.fields])
             key_col = mapping.get(key_col, key_col)
         phys_parts = [mapping.get(c, c) if mapping else c for c in pl]
-        # INT64 micros, not legacy INT96: INT96 parquet columns carry
-        # no statistics, which would silently disable time-range data
-        # skipping on every timestamp column this table writes.  Set
-        # at runtime so tables built under a vanilla session (the
-        # driver's) still get temporal stats — the same ambient-conf
-        # pattern catalog.load_table uses for nanosAsLong.
-        self.spark.conf.set("spark.sql.parquet.outputTimestampType",
-                            "TIMESTAMP_MICROS")
+        # INT64 micros, not legacy INT96, even under a vanilla session
+        ensure_session_confs(self.spark)
         w = df.write.mode("overwrite")
         if phys_parts:
             w = w.partitionBy(*phys_parts)
@@ -3332,9 +3328,11 @@ class TxLogTable:
         Fails if the target version left the log or any of its files
         were vacuumed (restoring past the vacuum horizon is
         unrecoverable by design — that's what the horizon means).
-        `retired_physical` stays the UNION of both snapshots: schema
-        history may rewind, but a physical column name can never be
-        reused without risking resurrecting dropped data.
+        `retired_physical` keeps every physical name either snapshot
+        ever used — both retired lists plus HEAD's live names — minus
+        the names the target makes live again: schema history may
+        rewind, but a physical column name can never be reused without
+        risking resurrecting dropped data.
 
         `as_of=<unix seconds>` is RESTORE TO TIMESTAMP (resolved to a
         version via the commit log's wall-clock times, like read).
@@ -3374,10 +3372,23 @@ class TxLogTable:
         readds = _readd_actions(sorted(old.files.items()), _MTIME_KEYS)
         # the whole meta rewinds — defaults with the schema they belong
         # to — except: the protocol (no key, so replay keeps the
-        # floor), retired physical names (the union: a name is never
-        # reused) and root ownership (ever owned stays owned)
+        # floor), retired physical names (a name that was ever live
+        # stays reserved unless the target makes it live again; an
+        # unmapped target takes the identity mapping so that later
+        # column adds route around them) and root ownership (ever
+        # owned stays owned)
+        def mapping_of(s: Snapshot) -> dict[str, str]:
+            if s.mapping is not None:
+                return s.mapping
+            return {f_["name"]: f_["name"]
+                    for f_ in json.loads(s.schema_json)["fields"]}
+
+        retired = sorted({*snap.retired, *old.retired,
+                          *mapping_of(snap).values()}
+                         - set(mapping_of(old).values()))
         meta = _meta_of(_dc_replace(
-            old, retired=sorted(set(snap.retired) | set(old.retired)),
+            old, retired=retired,
+            mapping=mapping_of(old) if retired else old.mapping,
             owns_root=snap.owns_root or old.owns_root))
         del meta["protocol"]
         actions = [{"commit": {"op": "RESTORE", "to_version": version,

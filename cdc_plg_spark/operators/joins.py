@@ -328,26 +328,28 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join (IP-range lookup, sessionization, sensor alignment)
     uses at 100 TB."""
     ev = load_table(spark, "events", sf_dir)
-    width = 600  # seconds = the interval length
+    # the interval length, in µs: the oracle's epoch() keeps sub-second
+    # fractions, which unix_timestamp would truncate away
+    width = 600 * 10**6
     clicks = (ev.filter(F.col("event_type") == "click")
               .select(F.col("user_id").alias("c_user"),
                       F.col("event_id").alias("click_id"),
-                      F.unix_timestamp("ts").alias("c_s")))
+                      F.unix_micros("ts").alias("c_us")))
     views = (ev.filter(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
-                     F.unix_timestamp("ts").alias("v_s"))
-             .withColumn("bucket", (F.col("v_s") / width).cast("long")))
-    # a click at c_s matches views with v_s in [c_s-600, c_s): those
-    # views live in buckets {floor(c_s/600)-1, floor(c_s/600)}; explode
-    # the click side into both candidate buckets
-    cb = (F.col("c_s") / width).cast("long")
+                     F.unix_micros("ts").alias("v_us"))
+             .withColumn("bucket", (F.col("v_us") / width).cast("long")))
+    # a click at c_us matches views with v_us in [c_us-width, c_us): those
+    # views live in buckets {floor(c_us/width)-1, floor(c_us/width)};
+    # explode the click side into both candidate buckets
+    cb = (F.col("c_us") / width).cast("long")
     clicks2 = clicks.withColumn("bucket",
                                 F.explode(F.array(cb - 1, cb)))
     joined = (clicks2.join(
         views,
         (clicks2.c_user == views.v_user) &
         (clicks2.bucket == views.bucket) &
-        (views.v_s >= clicks2.c_s - width) & (views.v_s < clicks2.c_s)))
+        (views.v_us >= clicks2.c_us - width) & (views.v_us < clicks2.c_us)))
     return (joined.groupBy(F.col("c_user").alias("user_id"))
             .agg(F.count(F.lit(1)).alias("n_pairs"),
                  F.countDistinct("click_id").alias("n_clicks")))

@@ -26,7 +26,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_plg_spark.catalog import ensure_session_confs
+from cdc_plg_spark.session import ensure_session_confs
 
 # Parquet-file schema of the events fixture (µs TIMESTAMP since fixture
 # v4) — matches what the batch reader sees after catalog.load_table.
@@ -174,20 +174,6 @@ def staged_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                  (now + 60 * i, now + 60 * i))
     return (spark.readStream.schema(EVENTS_RAW_SCHEMA)
             .option("maxFilesPerTrigger", "1").parquet(stage))
-
-
-ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
-                    "RocksDBStateStoreProvider")
-
-
-def use_rocksdb_state(spark: SparkSession) -> None:
-    """Switch stateful streaming to the RocksDB state store — the 100 TB
-    default (SURVEY.md §4): state spills to local disk instead of
-    living on the JVM heap, so watermark-bounded joins/aggs with
-    hundreds of millions of keys don't OOM executors. Takes effect for
-    queries started after the call."""
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   ROCKSDB_PROVIDER)
 
 
 # Per-call scratch roots (checkpoint + parquet spill), removed at

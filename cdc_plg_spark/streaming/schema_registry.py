@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from cdc_plg_spark.catalog import ensure_session_confs
+from cdc_plg_spark.session import ensure_session_confs
 
 REGISTRY_SCHEMA = ("table STRING, version INT, schema_json STRING, "
                    "effective_ts TIMESTAMP")

@@ -23,22 +23,16 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from pyspark.sql import SparkSession
+from cdc_plg_spark.session import get_spark
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.soak/sf1"
 PARTS = sys.argv[2] if len(sys.argv) > 2 else "32"
 
-spark = (SparkSession.builder.master("local[32]")
-         .appName("lsh-scale-point")
-         .config("spark.sql.shuffle.partitions", PARTS)
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.files.maxPartitionBytes", "16m")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.scheduler.mode", "FAIR")
-         .config("spark.driver.memory", "8g")
-         .config("spark.ui.enabled", "false").getOrCreate())
+spark = get_spark("lsh-scale-point", extra_confs={
+    "spark.sql.shuffle.partitions": PARTS,
+    "spark.sql.files.maxPartitionBytes": "16m",
+    "spark.scheduler.mode": "FAIR",
+    "spark.driver.memory": "8g"})
 spark.sparkContext.setLogLevel("ERROR")
 
 from cdc_plg_spark import registry  # noqa: E402

@@ -50,26 +50,18 @@ def lint_and_check(sf_dir: str, names: list[str], do_check: bool
     sf0.01, so this is the value-parity-at-scale evidence.  The
     O(SF^2)-by-design exact baselines are lint-only (their oracle is
     the same quadratic join on the DuckDB side)."""
-    from pyspark.sql import SparkSession
-
     from cdc_plg_spark import registry
     from cdc_plg_spark.plans.advisor import advise
+    from cdc_plg_spark.session import get_spark
     from cdc_plg_spark.testing import check_query
 
-    spark = (SparkSession.builder.master("local[32]")
-             .appName("scale-soak-lint")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.files.maxPartitionBytes", "16m")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             # match the soak bench's session: the default 1g driver
-             # OOMs the bucketed saveAsTable sort at sf2 (12M rows)
-             # while the 8g bench session writes it in 1.5 s — the
-             # lint must run the plans under the same memory contract
-             # it is auditing
-             .config("spark.driver.memory", "8g")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    # match the soak bench's session: the default 1g driver OOMs the
+    # bucketed saveAsTable sort at sf2 (12M rows) while the 8g bench
+    # session writes it in 1.5 s — the lint must run the plans under
+    # the same memory contract it is auditing
+    spark = get_spark("scale-soak-lint", extra_confs={
+        "spark.sql.files.maxPartitionBytes": "16m",
+        "spark.driver.memory": "8g"})
     spark.sparkContext.setLogLevel("ERROR")
     entries = registry.all_entries()
     lints: dict[str, list[str]] = {}

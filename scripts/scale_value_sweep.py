@@ -122,16 +122,10 @@ def main() -> None:
     if args.resume and os.path.exists(args.out):
         results = json.load(open(args.out)).get("results", {})
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[32]")
-             .appName("scale-value-sweep")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.files.maxPartitionBytes", "16m")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.driver.memory", "8g")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    from cdc_plg_spark.session import get_spark
+    spark = get_spark("scale-value-sweep", extra_confs={
+        "spark.sql.files.maxPartitionBytes": "16m",
+        "spark.driver.memory": "8g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     from cdc_plg_spark import registry

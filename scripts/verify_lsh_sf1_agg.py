@@ -25,7 +25,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -33,18 +35,13 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.soak/sf1"
 MOD = 2147483648  # 2^31
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-spark = (SparkSession.builder.master("local[32]")
-         .appName("verify-lsh-sf1-agg")
-         .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.files.maxPartitionBytes", "16m")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.driver.memory", "8g")
-         .config("spark.ui.enabled", "false").getOrCreate())
+from cdc_plg_spark.session import get_spark, phys_mem_bytes  # noqa: E402
+
+spark = get_spark("verify-lsh-sf1-agg", extra_confs={
+    "spark.sql.files.maxPartitionBytes": "16m",
+    "spark.driver.memory": "8g"})
 spark.sparkContext.setLogLevel("ERROR")
 
 from cdc_plg_spark import registry  # noqa: E402
@@ -78,23 +75,28 @@ con = duckdb.connect()
 con.execute("SET TimeZone='UTC'")
 con.execute(f"SET threads TO {os.cpu_count()}")
 # The sf1 oracle's working set passed 97 GB RSS unbounded on a 128 GB
-# box (first r14 attempt, killed to protect a concurrent suite run):
-# cap it and give the in-memory connection a spill dir so the twin
-# completes by spilling instead of racing the OOM killer.
-con.execute("SET memory_limit='60GB'")
-spill = os.path.join(os.path.dirname(SF.rstrip("/")), "duck_tmp")
-os.makedirs(spill, exist_ok=True)
-con.execute(f"SET temp_directory='{spill}'")
-for t in ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"):
-    p = os.path.join(SF, f"{t}.parquet")
-    if os.path.exists(p):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-t0 = time.perf_counter()
-dn, d1, d2, dm, dx = con.execute(
-    f"""SELECT COUNT(*), SUM(doc1), SUM(doc2), SUM(n_match),
-               SUM((doc1*131071 + doc2*31 + n_match) % {MOD})
-        FROM ({entry.oracle})""").fetchone()
+# box: cap it at half of physical memory (60 GB at most) and give the
+# in-memory connection a spill dir so the twin completes by spilling
+# instead of racing the OOM killer.
+limit_mb = min(60 * 1024, phys_mem_bytes() // 2**21)
+con.execute(f"SET memory_limit='{limit_mb}MB'")
+spill = tempfile.mkdtemp(prefix="duck_spill_")
+try:
+    con.execute(f"SET temp_directory='{spill}'")
+    for t in ("region", "nation", "customer", "supplier", "part", "orders",
+              "lineitem", "events", "documents", "embeddings"):
+        p = os.path.join(SF, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    t0 = time.perf_counter()
+    dn, d1, d2, dm, dx = con.execute(
+        f"""SELECT COUNT(*), SUM(doc1), SUM(doc2), SUM(n_match),
+                   SUM((doc1*131071 + doc2*31 + n_match) % {MOD})
+            FROM ({entry.oracle})""").fetchone()
+finally:
+    con.close()
+    shutil.rmtree(spill, ignore_errors=True)
 duck_agg = {"n": int(dn), "s_doc1": int(d1), "s_doc2": int(d2),
             "s_match": int(dm), "s_mix": int(dx)}
 t_duck = round(time.perf_counter() - t0, 2)

@@ -1749,6 +1749,61 @@ def test_restore_idempotent_txn_and_schema(spark, tdir):
     assert t.fsck(deep=True) == []
 
 
+def test_restore_across_drop_column_keeps_fsck_clean(spark, tdir):
+    """RESTORE to before a DROP COLUMN on a column-mapped table makes
+    the dropped physical live again, so it leaves the retired list;
+    every other name that was ever live stays reserved, so later ADDs
+    take fresh physicals and nothing old resurrects."""
+    df = spark.range(0, 30).select(F.col("id").alias("user_id"),
+                                   (F.col("id") * 2).alias("value"),
+                                   (F.col("id") * 3).alias("extra"))
+    t = TxLogTable.create(spark, os.path.join(tdir, "t"), df, "user_id",
+                          n_files=2)                         # v0
+    t.drop_column("extra")                                   # v1: mapped
+    t.add_column("tag", "string")                            # v2
+    t.drop_column("value")                                   # v3
+    t.restore(1)                                             # v4
+    snap = t.snapshot()
+    assert sorted(snap.mapping.values()) == ["user_id", "value"]
+    assert snap.retired == ["extra", "tag"]
+    assert t.fsck(deep=True) == []
+    assert sorted(map(tuple, t.read().collect())) == \
+        [(i, 2 * i) for i in range(30)]
+    t.add_column("tag", "string")
+    t.add_column("extra", "long")
+    snap = t.snapshot()
+    phys = list(snap.mapping.values())
+    for c in ("tag", "extra"):
+        assert snap.mapping[c] not in snap.retired
+        assert phys.count(snap.mapping[c]) == 1
+    assert t.fsck(deep=True) == []
+    assert t.read().filter("extra IS NOT NULL OR tag IS NOT NULL") \
+               .count() == 0
+
+
+def test_restore_unmapped_target_reserves_head_columns(spark, tdir):
+    """Restoring an unmapped table to before a widening merge retires
+    the added column's name and gives the table the identity mapping,
+    so re-adding the column and a later DROP keep fsck clean."""
+    t = make_table(spark, os.path.join(tdir, "t"), n=20, n_files=1)
+    t.merge(spark.createDataFrame([(1, -1, 77, "U")],
+                                  "user_id long, value long, "
+                                  "extra long, op string"),
+            op_col="op")                                     # v1: +extra
+    t.restore(0)                                             # v2
+    snap = t.snapshot()
+    assert snap.mapping == {"user_id": "user_id", "value": "value"}
+    assert snap.retired == ["extra"]
+    t.append(spark.createDataFrame([(100, 1, 5)],
+                                   "user_id long, value long, extra long"))
+    t.drop_column("value")
+    snap = t.snapshot()
+    assert snap.mapping["extra"] != "extra"
+    assert t.fsck(deep=True) == []
+    assert {(r["user_id"], r["extra"]) for r in t.read().collect()} == \
+        {(i, None) for i in range(20)} | {(100, 5)}
+
+
 def test_restore_blocked_past_vacuum_horizon(spark, tdir):
     """Restoring past the vacuum horizon must fail loudly — the files
     are gone; that is what the horizon means."""

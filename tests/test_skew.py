@@ -29,9 +29,13 @@ def test_salting_spreads_hot_key(spark):
                                   (F.col("id") * 10).alias("attr"))
 
     # AQE's skew handling is the built-in fix; disable it here to
-    # isolate what explicit salting contributes
+    # isolate what explicit salting contributes.  Spreading the hot key
+    # over n_salt salts needs enough reducers for the salts to land
+    # apart, so pin 32 rather than inherit the box-sized session value.
     prev = spark.conf.get("spark.sql.adaptive.enabled")
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:
         naive = (fact.hint("shuffle_hash").join(dim, "k")
                  .select("k", "row_id", "attr"))
@@ -54,6 +58,7 @@ def test_salting_spreads_hot_key(spark):
         assert salted_frac < naive_frac / 4, (naive_frac, salted_frac)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def test_lsh_bucket_skew_guard_bounds_tasks_and_preserves_pairs(spark):

@@ -33,10 +33,9 @@ def test_sql_equals_dataframe(spark, sf_dir):
 
 
 def test_rocksdb_state_store_same_results(spark, sf_dir):
-    from cdc_plg_spark.streaming.core import (ROCKSDB_PROVIDER,
-                                              read_events_stream,
-                                              run_to_table,
-                                              use_rocksdb_state)
+    """The engine's RocksDB state store (a get_spark build default)
+    gives the same windowed counts as Spark's built-in provider."""
+    from cdc_plg_spark.streaming.core import read_events_stream, run_to_table
 
     def windowed_counts():
         ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
@@ -47,15 +46,14 @@ def test_rocksdb_state_store_same_results(spark, sf_dir):
                       for r in out.collect())
 
     key = "spark.sql.streaming.stateStore.providerClass"
-    default = windowed_counts()
-    prev = spark.conf.get(key, None)
+    engine = spark.conf.get(key)
+    assert engine.endswith("RocksDBStateStoreProvider")
+    rocks = windowed_counts()
     try:
-        use_rocksdb_state(spark)
-        assert spark.conf.get(key) == ROCKSDB_PROVIDER
-        rocks = windowed_counts()
+        spark.conf.unset(key)
+        builtin = spark.conf.get(key)
+        assert builtin.endswith("HDFSBackedStateStoreProvider")
+        heap = windowed_counts()
     finally:
-        if prev:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
-    assert rocks == default and len(rocks) > 0
+        spark.conf.set(key, engine)
+    assert rocks == heap and len(rocks) > 0

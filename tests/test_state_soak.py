@@ -6,9 +6,9 @@ stateful aggregation in several micro-batches, and asserts (a) the
 result equals the batch aggregate, (b) the state store really is
 RocksDB and holds every key — i.e. per-key state scaled past the
 toy-keyspace path and lived off-heap, the 100 TB configuration
-(streaming/core.use_rocksdb_state).
+(session.BUILD_DEFAULTS sets the provider on every get_spark session).
 
-local[32] bound: ~600k rows / 300k keys keeps the soak under a minute;
+~600k rows / 300k keys keeps the soak under a minute;
 the design point it certifies is the provider + state-rows accounting,
 which is what changes between heap and RocksDB — capacity beyond RAM
 is RocksDB's documented contract, not testable in CI.
