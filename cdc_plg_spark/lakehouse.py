@@ -152,6 +152,7 @@ import shutil
 import uuid
 from dataclasses import dataclass, field, replace as _dc_replace
 from datetime import date as _date, datetime as _datetime, timezone as _tz
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -380,6 +381,61 @@ def _readd_actions(entries, drop: tuple[str, ...] = ()) -> list[dict]:
              for p, s in entries]
             + [{"dv": {"path": p, "keys": list(s["dv"])}}
                for p, s in entries if s.get("dv")])
+
+
+class ChangeSide(NamedTuple):
+    """One image of a change plan: the rows of `files` whose keys are
+    not in `drop`, plus the rows of `extra_files` whose keys are in
+    `extra_keys`."""
+    files: list[str]
+    drop: list
+    extra_files: list[str]
+    extra_keys: list
+
+
+class ChangePlan(NamedTuple):
+    """Which rows enter the diff between two snapshots: `old` is the
+    before-image, `new` the after-image, and `parts` holds the
+    manifest partition tuple of every file either side names."""
+    old: ChangeSide
+    new: ChangeSide
+    parts: dict[str, dict]
+
+
+def _change_plan(a: Snapshot, b: Snapshot) -> ChangePlan:
+    """The one file-level change rule between snapshots `a` and `b`,
+    shared by the batch change feed (TxLogTable.table_changes) and the
+    `txlog_changes` stream; each of those only diffs the rows.
+
+    Old side: the files `b` removed, minus the keys their deletion
+    vectors already hid at `a` (never live in the range), plus the
+    rows of surviving files whose DV GREW — a dv-mode delete changes
+    no file, so those keys' before-images are deletes to report.
+    New side: the files `b` added, minus the keys dv-deleted at `b`,
+    plus the rows of surviving files whose DV SHRANK — RESTORE
+    replaying a pre-delete snapshot resurrects them as inserts.
+    Removed files are absent from `b.files`, so their partition
+    tuples ride along in `parts` (tuples are path-keyed and
+    immutable, so `a` and `b` agree on surviving files)."""
+    removed = sorted(set(a.files) - set(b.files))
+    added = sorted(set(b.files) - set(a.files))
+    kept = set(a.files) & set(b.files)
+
+    def dv(s: Snapshot, p: str) -> set:
+        return set(s.files[p].get("dv", ()))
+
+    def side(base: list[str], s: Snapshot, extra: dict) -> ChangeSide:
+        extra = {p: ks for p, ks in extra.items() if ks}
+        return ChangeSide(base,
+                          sorted(set().union(*(dv(s, p) for p in base))),
+                          sorted(extra), sorted(set().union(*extra.values())))
+
+    old = side(removed, a, {p: dv(b, p) - dv(a, p) for p in kept})
+    new = side(added, b, {p: dv(a, p) - dv(b, p) for p in kept})
+    pool = {**a.files, **b.files}
+    named = (*removed, *added, *old.extra_files, *new.extra_files)
+    return ChangePlan(old, new, {p: pool[p]["partition"] for p in named
+                                 if "partition" in pool[p]})
 
 
 def _checks_referencing(checks: dict[str, str], col: str) -> list[str]:
@@ -955,6 +1011,40 @@ def _footer_stats(path: str, cols: list[str]):
     return lo, hi, md.num_rows, nulls
 
 
+# column types whose footer min/max become manifest stats: scalars with
+# a total order and a JSON form (nested types have nothing to prune on)
+_STAT_TYPES = ("long", "integer", "short", "byte", "double", "float",
+               "string", "boolean", *_TEMPORAL_STAT_TYPES)
+
+
+def _stat_cols(schema: StructType, skip=()) -> list[str]:
+    return [f_.name for f_ in schema.fields
+            if f_.dataType.typeName() in _STAT_TYPES and f_.name not in skip]
+
+
+def _footer_entry(path: str, key_col: str,
+                  stat_cols: list[str]) -> tuple[dict, int | None]:
+    """The `rows`/`bytes`/`min_key`/`max_key`/`cols` entry of the
+    parquet file at `path`, from its footer, and the key column's null
+    count (None when a footer lacks it).  `min_key`/`max_key` are
+    absent when the footer has no usable key stats; what that and NULL
+    keys mean is the caller's to decide."""
+    lo, hi, n_rows, nulls = _footer_stats(path, stat_cols)
+    entry = {"rows": n_rows, "bytes": os.path.getsize(path)}
+    if key_col in lo:
+        entry.update(min_key=lo[key_col], max_key=hi[key_col])
+    # keyed by PHYSICAL name: stable across RENAME COLUMN, so data
+    # skipping survives renames; readers translate (read() looks up
+    # snap.phys(col)).  Entry shape is [min, max] or [min, max,
+    # null_count] — the count (when the footer knows it) is what lets a
+    # predicate DELETE drop a whole file: stats ignore NULLs, so
+    # containment alone never proves every ROW matches.
+    entry["cols"] = {c: ([lo[c], hi[c], nulls[c]]
+                         if nulls.get(c) is not None else [lo[c], hi[c]])
+                     for c in stat_cols if c != key_col and c in lo}
+    return entry, nulls.get(key_col)
+
+
 def _extend_mapping(snap: "Snapshot", new_fields,
                     memo: dict[str, str] | None = None) -> dict[str, str]:
     """Column-mapping entries for schema-widening new fields.  The
@@ -1439,16 +1529,10 @@ class TxLogTable:
         # micros, dates as epoch days — _stat_encode): time-range
         # predicates are THE dominant skip dimension for CDC tables at
         # scale, so excluding them would forfeit most of the pruning.
-        # Nested types are excluded (no total order to prune on).
         # Footer reads happen on the driver here (ms each,
         # manifest-sized count); on a real cluster the same loop
         # distributes trivially.
-        stat_types = ("long", "integer", "short", "byte", "double",
-                      "float", "string", "boolean",
-                      *_TEMPORAL_STAT_TYPES)
-        stat_cols = [f_.name for f_ in df.schema.fields
-                     if f_.dataType.typeName() in stat_types
-                     and f_.name not in phys_parts]
+        stat_cols = _stat_cols(df.schema, skip=phys_parts)
         ptype = {(mapping.get(c, c) if mapping else c): part_types[c]
                  for c in pl}
         adds = []
@@ -1466,9 +1550,7 @@ class TxLogTable:
                         f"them before writing (file {rel!r})")
                 part = {p: _typed_part(raw[p], ptype[p])
                         for p in phys_parts}
-            lo, hi, n_rows, nulls = _footer_stats(
-                os.path.join(self.path, rel), stat_cols)
-            kn = nulls.get(key_col)
+            ent, kn = _footer_entry(self._abs(rel), key_col, stat_cols)
             if kn is not None and kn > 0:
                 raise ValueError(
                     f"NULL values in key column {key_col!r}: the "
@@ -1476,7 +1558,7 @@ class TxLogTable:
                     f"keys (NULL never matches), so a NULL-keyed row "
                     f"could never be updated or deleted — filter NULL "
                     f"keys before writing")
-            if key_col not in lo or kn is None:
+            if "min_key" not in ent or kn is None:
                 # no usable key footer stats (foreign writer / stats
                 # off) OR unknown null count — one distributed scan
                 # recomputes stats and re-checks key nullability
@@ -1485,23 +1567,7 @@ class TxLogTable:
                         out_dir, rel_dir, key_col, stat_cols, ptype),
                     out_dir, key_col, bloom_bits)
             adds.append({"add": {
-                "path": rel,
-                "rows": n_rows,
-                "bytes": os.path.getsize(os.path.join(self.path, rel)),
-                "min_key": lo[key_col],
-                "max_key": hi[key_col],
-                # keyed by PHYSICAL name: stable across RENAME COLUMN,
-                # so data skipping survives renames; readers translate
-                # (read() looks up snap.phys(col)).  Entry shape is
-                # [min, max] or [min, max, null_count] — the count (when
-                # the footer knows it) is what lets a predicate DELETE
-                # drop a whole file: stats ignore NULLs, so containment
-                # alone never proves every ROW matches.
-                "cols": {c: ([lo[c], hi[c], nulls[c]]
-                             if nulls.get(c) is not None
-                             else [lo[c], hi[c]])
-                         for c in stat_cols
-                         if c != key_col and c in lo},
+                "path": rel, **ent,
                 # typed partition values, also keyed by PHYSICAL name
                 # (same rename-stability contract as the stats)
                 **({"partition": part} if part is not None else {}),
@@ -1755,6 +1821,21 @@ class TxLogTable:
             if f_.name == snap.key_col]
         return self.spark.createDataFrame([(k,) for k in keys],
                                           StructType(kf))
+
+    def _change_side(self, snap: Snapshot, side: ChangeSide,
+                     parts: dict[str, dict]) -> DataFrame:
+        """One image of a change plan, read under `snap`'s schema."""
+        key = snap.key_col
+        df = self._read_files(snap, side.files, parts=parts)
+        if side.drop:
+            df = df.join(F.broadcast(self._key_df(snap, side.drop)),
+                         on=key, how="left_anti")
+        if side.extra_keys:
+            df = df.unionByName(
+                self._read_files(snap, side.extra_files, parts=parts)
+                .join(F.broadcast(self._key_df(snap, side.extra_keys)),
+                      on=key, how="left_semi"))
+        return df
 
     def _read_files_live(self, snap: Snapshot, rel_paths) -> DataFrame:
         """`_read_files` minus each file's deletion vector: the
@@ -2218,30 +2299,17 @@ class TxLogTable:
                         f"{gc!r} = ({ge}): {bad[0]} — fix the "
                         f"declaration or rewrite the offending files "
                         f"before converting")
-        stat_types = ("long", "integer", "short", "byte", "double",
-                      "float", "string", "boolean",
-                      *_TEMPORAL_STAT_TYPES)
-        stat_cols = [f_.name for f_ in file_schema.fields
-                     if f_.dataType.typeName() in stat_types]
+        stat_cols = _stat_cols(file_schema)
         adds = []
         for rel in rels:
-            lo, hi, n_rows, nulls = _footer_stats(t._abs(rel),
-                                                  stat_cols)
-            kn = nulls.get(key_col)
-            if key_col not in lo or kn is None or kn > 0:
+            ent, kn = _footer_entry(t._abs(rel), key_col, stat_cols)
+            if "min_key" not in ent or kn is None or kn > 0:
                 raise ValueError(
                     f"file {rel!r} lacks usable key footer stats or "
                     f"holds NULL keys; rewrite it (e.g. through "
                     f"spark.read -> create()) before converting")
             adds.append({"add": {
-                "path": rel, "rows": n_rows,
-                "bytes": os.path.getsize(t._abs(rel)),
-                "min_key": lo[key_col], "max_key": hi[key_col],
-                "cols": {c: ([lo[c], hi[c], nulls[c]]
-                             if nulls.get(c) is not None
-                             else [lo[c], hi[c]])
-                         for c in stat_cols
-                         if c != key_col and c in lo},
+                "path": rel, **ent,
                 **({"partition": file_parts[rel]} if pschema else {}),
                 # layout marker: this file's path intentionally
                 # carries no k=v segments, the manifest tuple is the
@@ -3542,6 +3610,10 @@ class TxLogTable:
         later update yields one 'U' with the final image.  'I'/'U'
         carry the after-image, 'D' the before-image.
 
+        Which files and deletion-vector keys enter the diff is decided
+        by `_change_plan`, the one rule the `txlog_changes` stream
+        shares; this method only runs the row diff, in Spark.
+
         `full_images=True` switches to the four-row-kind CDF shape
         (the public Delta CDF contract): an update emits BOTH images
         as `U_pre` (before) and `U_post` (after) rows.  That is what
@@ -3549,60 +3621,11 @@ class TxLogTable:
         aggregate requires retracting the before-image, not just
         adding the after-image.  Same single diff join; the update
         branch just explodes into two rows."""
-        a = self.snapshot(from_version)
         b = self.snapshot(to_version)
         key = b.key_col
-        removed = sorted(set(a.files) - set(b.files))
-        added = sorted(set(b.files) - set(a.files))
-        # per-file partition tuples spanning BOTH snapshots: removed
-        # files are absent from `b.files`, so their manifest tuples
-        # must ride along explicitly (tuples are path-keyed and
-        # immutable, so a/b agree on surviving files)
-        pparts = {p: s.get("partition")
-                  for p, s in {**a.files, **b.files}.items()}
-        # deletion-vector awareness: (1) rows already dv-deleted at `a`
-        # were never live in the range — anti-join them off the old
-        # side; (2) a DV that GREW on a surviving file is a delete this
-        # range must report (the file set alone doesn't change on a
-        # dv-mode delete) — semi-join those keys' before-images onto
-        # the old side; (3) rows dv-deleted at `b` in an added file are
-        # not live at `b` — anti-join them off the new side.
-        old = self._read_files(b, removed, parts=pparts)
-        dv_a = sorted({k for p in removed
-                       for k in a.files[p].get("dv", ())})
-        if dv_a:
-            old = old.join(F.broadcast(self._key_df(b, dv_a)),
-                           on=key, how="left_anti")
-        grown = {p: sorted(set(b.files[p].get("dv", ()))
-                           - set(a.files[p].get("dv", ())))
-                 for p in set(a.files) & set(b.files)}
-        grown = {p: ks for p, ks in grown.items() if ks}
-        if grown:
-            pool = sorted({k for ks in grown.values() for k in ks})
-            dvd = (self._read_files(b, sorted(grown), parts=pparts)
-                   .join(F.broadcast(self._key_df(b, pool)),
-                         on=key, how="left_semi"))
-            old = old.unionByName(dvd)
-        new = self._read_files(b, added, parts=pparts)
-        dv_b = sorted({k for p in added
-                       for k in b.files[p].get("dv", ())})
-        if dv_b:
-            new = new.join(F.broadcast(self._key_df(b, dv_b)),
-                           on=key, how="left_anti")
-        # (4) a DV that SHRANK on a surviving file (RESTORE replaying
-        # a pre-delete snapshot) resurrects rows: dead at `a`, live at
-        # `b` — semi-join those keys onto the new side so they report
-        # as inserts
-        shrunk = {p: sorted(set(a.files[p].get("dv", ()))
-                            - set(b.files[p].get("dv", ())))
-                  for p in set(a.files) & set(b.files)}
-        shrunk = {p: ks for p, ks in shrunk.items() if ks}
-        if shrunk:
-            pool = sorted({k for ks in shrunk.values() for k in ks})
-            und = (self._read_files(b, sorted(shrunk), parts=pparts)
-                   .join(F.broadcast(self._key_df(b, pool)),
-                         on=key, how="left_semi"))
-            new = new.unionByName(und)
+        plan = _change_plan(self.snapshot(from_version), b)
+        old = self._change_side(b, plan.old, plan.parts)
+        new = self._change_side(b, plan.new, plan.parts)
         cols = [f.name for f in
                 StructType.fromJson(json.loads(b.schema_json)).fields]
         o = old.withColumn("_o", F.lit(1)).alias("o")

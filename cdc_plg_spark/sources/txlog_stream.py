@@ -12,14 +12,17 @@ Scale shape:
 - Offsets are commit versions (a dict `{"version": N}` in Spark's
   offset log), so checkpoint recovery is exact replay of whole commits
   — the resume-from-checkpoint-ts contract (README.md:65,:119).
-- The driver does manifest work only: per new commit it diffs the two
-  snapshots' file lists (pure JSON replay, no data pass) and emits ONE
-  InputPartition per commit carrying the removed/added file lists.
-- Executors do all data work: each partition diffs its commit's
-  removed-vs-added files with pyarrow/pandas (Arrow batch reads, key-
-  level outer merge, null-safe column compare) and yields the net
-  I/U/D rows for that commit.  Rows rewritten unchanged cancel, so a
-  stats-pruned merge commit streams only its real changes.
+- The driver does manifest work only: per new commit it replays the
+  two snapshots (pure JSON, no data pass), takes their
+  `lakehouse._change_plan` — the one file-level change rule, shared
+  with `TxLogTable.table_changes` — and emits ONE InputPartition per
+  commit carrying it.
+- Executors do all data work: each partition reads its plan's old and
+  new sides with pyarrow/pandas (Arrow batch reads, key-level outer
+  merge, null-safe column compare) and yields the net I/U/D rows for
+  that commit.  Rows rewritten unchanged cancel, so a stats-pruned
+  merge commit streams only its real changes.  Only this row diff
+  mirrors table_changes' Spark join; which rows enter it is the plan's.
 """
 
 from __future__ import annotations
@@ -32,72 +35,38 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from cdc_plg_spark.lakehouse import _parse_partition_path, _typed_part
+from cdc_plg_spark.lakehouse import (
+    ChangePlan, ChangeSide, Snapshot, TxLogTable, _change_plan,
+    _parse_partition_path, _typed_part,
+)
 
 
-def _log_versions(log_dir: str) -> list[int]:
-    if not os.path.isdir(log_dir):
-        return []
-    return sorted(int(f[:20]) for f in os.listdir(log_dir)
-                  if f[:20].isdigit() and f.endswith(".json")
-                  and not f.endswith(".checkpoint.json"))
+def _versions(table: TxLogTable) -> list[int]:
+    """The table's log versions; a path holding no log is an error."""
+    versions = table._versions()
+    if not versions:
+        raise ValueError(f"not a TxLog table: {table.path}")
+    return versions
 
 
-def _snapshot(table_path: str, version: int):
-    """Manifest replay with stdlib only — safe on driver AND executor
-    (TxLogTable.snapshot needs no SparkSession, but importing the class
-    here keeps one replay implementation)."""
-    from cdc_plg_spark.lakehouse import TxLogTable
-
-    return TxLogTable(None, table_path).snapshot(version)
+def _head(table: TxLogTable) -> Snapshot:
+    return table.snapshot(_versions(table)[-1])
 
 
 class CommitPartition(InputPartition):
     def __init__(self, table_path: str, version: int,
-                 removed: list[str], added: list[str],
-                 schema_json: str, key_col: str,
-                 full_images: bool = False,
-                 dv_old: list | None = None,
-                 dv_new: list | None = None,
-                 dv_grown: list | None = None,
-                 grown_files: list[str] | None = None,
-                 mapping: dict | None = None,
-                 partition_by: list[str] | None = None,
-                 dv_shrunk: list | None = None,
-                 shrunk_files: list[str] | None = None,
-                 parts: dict | None = None) -> None:
+                 plan: ChangePlan | None, schema_json: str, key_col: str,
+                 mapping: dict[str, str], full_images: bool) -> None:
         self.table_path = table_path
         self.version = version
-        self.removed = removed
-        self.added = added
+        # _change_plan(version - 1, version); None = the empty batch
+        self.plan = plan
         self.schema_json = schema_json
         self.key_col = key_col
-        self.full_images = full_images
         # logical -> physical parquet column names (column mapping);
-        # None/{} = identity
-        self.mapping = mapping or {}
-        # deletion-vector context for this commit step:
-        # dv_old — keys already dv-deleted at v-1 in `removed` files
-        #          (never live in this step; drop from the old side)
-        # dv_new — keys dv-deleted at v in `added` files (not live)
-        # dv_grown / grown_files — keys whose DV grew on surviving
-        #          files this commit (= the dv-mode deletes to emit)
-        self.dv_old = dv_old or []
-        self.dv_new = dv_new or []
-        self.dv_grown = dv_grown or []
-        self.grown_files = grown_files or []
-        # dv_shrunk / shrunk_files — keys whose DV SHRANK on surviving
-        #          files this commit (RESTORE resurrecting dv-deleted
-        #          rows; emit as inserts on the new side)
-        self.dv_shrunk = dv_shrunk or []
-        self.shrunk_files = shrunk_files or []
-        # partition columns (PHYSICAL names): the parquet bytes lack
-        # them; each file's TYPED values ride along in `parts` ({rel
-        # path -> tuple}, from the add-actions — the manifest is the
-        # authority, r9) and re-attach at read.  Pre-r9 manifests
-        # without tuples fall back to hive k=v path parsing.
-        self.partition_by = partition_by or []
-        self.parts = parts or {}
+        # {} = identity
+        self.mapping = mapping
+        self.full_images = full_images
 
 
 class TxLogChangesSource(DataSource):
@@ -108,10 +77,8 @@ class TxLogChangesSource(DataSource):
         return "txlog_changes"
 
     def schema(self) -> StructType:
-        snap = _snapshot(self.options["path"],
-                         _log_versions(os.path.join(
-                             self.options["path"], "_txlog"))[-1])
-        table_schema = StructType.fromJson(json.loads(snap.schema_json))
+        head = _head(TxLogTable(None, self.options["path"]))
+        table_schema = StructType.fromJson(json.loads(head.schema_json))
         return StructType(
             [StructField("commit_version", IntegerType(), False),
              StructField("change_type", StringType(), False),
@@ -135,8 +102,7 @@ class TxLogChangesSource(DataSource):
 class TxLogChangesReader(DataSourceStreamReader):
     def __init__(self, table_path: str, full_images: bool = False,
                  pinned_schema=None, max_commits: int = 0) -> None:
-        self.table_path = os.path.abspath(table_path)
-        self.log_dir = os.path.join(self.table_path, "_txlog")
+        self.table = TxLogTable(None, table_path)
         self.full_images = full_images
         # maxCommitsPerTrigger admission control: without it, a stream
         # STARTED on a table with a deep commit history plans its whole
@@ -154,47 +120,37 @@ class TxLogChangesReader(DataSourceStreamReader):
         # replay hole (pinned by the bounded-catchup test).
         self.max_commits = max_commits
         self._base: int | None = None
-        # the schema Spark pinned when the stream STARTED: commits
-        # that widen the table mid-stream must project down to it (a
-        # streaming DataFrame's schema is immutable — the honest
-        # Spark limit; restart the stream to pick up new columns).
-        # Strip the two feed columns; keep only table fields.
-        self.pinned_json = None
+        # schema, key and COLUMN MAPPING are pinned from one head
+        # snapshot when the stream STARTS.  Commits that widen the
+        # table mid-stream project down to the pinned schema (a
+        # streaming DataFrame's schema is immutable — the honest Spark
+        # limit; restart the stream to pick up new columns).  Physical
+        # parquet names are stable across RENAME COLUMN, so files from
+        # commits made BEFORE a rename translate to the pinned logical
+        # names through the pinned mapping — without it, a pre-rename
+        # commit's rows would surface NULL under the pinned name.
+        # (Mid-stream renames still require a restart, like all
+        # non-additive DDL.)  Spark passes the schema it took from
+        # schema(); strip the two feed columns, keep the table fields.
+        head = _head(self.table)
+        self.pinned_json = head.schema_json
         if pinned_schema is not None:
-            table_fields = [f for f in pinned_schema.fields
-                            if f.name not in ("commit_version",
-                                              "change_type")]
-            self.pinned_json = StructType(table_fields).json()
-        # the COLUMN MAPPING pinned at the same moment as the schema:
-        # physical parquet names are stable across RENAME COLUMN, so
-        # files from commits made BEFORE a rename translate to the
-        # pinned (current) logical names through the latest mapping —
-        # without this, a pre-rename commit's rows would surface NULL
-        # under the pinned name.  (Mid-stream renames still require a
-        # restart, like all non-additive DDL.)
-        try:
-            from cdc_plg_spark.lakehouse import TxLogTable
+            self.pinned_json = StructType(
+                [f for f in pinned_schema.fields
+                 if f.name not in ("commit_version", "change_type")]).json()
+        self.key_col = head.key_col
+        self.pinned_mapping = head.mapping or {}
 
-            versions = _log_versions(self.log_dir)
-            self.pinned_mapping = (TxLogTable(None, self.table_path)
-                                   .snapshot(versions[-1]).mapping
-                                   if versions else None)
-        except Exception:
-            self.pinned_mapping = None
-
-    # ---- driver side: offsets + manifest diff --------------------------
+    # ---- driver side: offsets + change plans ---------------------------
 
     def initialOffset(self) -> dict:
         # start at the table's FIRST log entry: version 0 (CREATE) is
         # the base image, so the first emitted batch is commit 1
-        versions = _log_versions(self.log_dir)
-        if not versions:
-            raise ValueError(f"not a TxLog table: {self.table_path}")
-        self._base = versions[0]
-        return {"version": versions[0]}
+        self._base = _versions(self.table)[0]
+        return {"version": self._base}
 
     def latestOffset(self) -> dict:
-        versions = _log_versions(self.log_dir)
+        versions = _versions(self.table)
         head = versions[-1]
         if self.max_commits > 0:
             if self._base is None:
@@ -211,52 +167,23 @@ class TxLogChangesReader(DataSourceStreamReader):
         # last uncommitted batch without calling initialOffset)
         if self._base is None or start["version"] > self._base:
             self._base = start["version"]
+
+        def part(version: int, plan: ChangePlan | None) -> CommitPartition:
+            return CommitPartition(self.table.path, version, plan,
+                                   self.pinned_json, self.key_col,
+                                   self.pinned_mapping, self.full_images)
+
         out = []
         # adjacent commits share a snapshot: replay each version ONCE
         # and roll it forward, halving driver-side manifest work on a
         # catch-up batch spanning many commits
-        a = _snapshot(self.table_path, start["version"])
+        a = self.table.snapshot(start["version"])
         for v in range(start["version"] + 1, end["version"] + 1):
-            b = _snapshot(self.table_path, v)
-            removed = sorted(set(a.files) - set(b.files))
-            added = sorted(set(b.files) - set(a.files))
-            grown = {p: sorted(set(b.files[p].get("dv", ()))
-                               - set(a.files[p].get("dv", ())))
-                     for p in set(a.files) & set(b.files)}
-            grown = {p: ks for p, ks in grown.items() if ks}
-            shrunk = {p: sorted(set(a.files[p].get("dv", ()))
-                                - set(b.files[p].get("dv", ())))
-                      for p in set(a.files) & set(b.files)}
-            shrunk = {p: ks for p, ks in shrunk.items() if ks}
-            # per-file partition tuples spanning BOTH snapshots:
-            # removed files are absent from b.files (mirrors
-            # TxLogTable.table_changes' pparts)
-            pool = {**a.files, **b.files}
-            touched = (set(removed) | set(added)
-                       | set(grown) | set(shrunk))
-            parts = {p: pool[p]["partition"] for p in touched
-                     if pool[p].get("partition")}
-            out.append(CommitPartition(
-                self.table_path, v, removed, added,
-                self.pinned_json or b.schema_json,
-                b.key_col, self.full_images,
-                mapping=(self.pinned_mapping if self.pinned_mapping
-                         is not None else b.mapping),
-                dv_old=sorted({k for p in removed
-                               for k in a.files[p].get("dv", ())}),
-                dv_new=sorted({k for p in added
-                               for k in b.files[p].get("dv", ())}),
-                dv_grown=sorted({k for ks in grown.values()
-                                 for k in ks}),
-                grown_files=sorted(grown),
-                partition_by=b.partition_by,
-                dv_shrunk=sorted({k for ks in shrunk.values()
-                                  for k in ks}),
-                shrunk_files=sorted(shrunk), parts=parts))
+            b = self.table.snapshot(v)
+            out.append(part(v, _change_plan(a, b)))
             a = b
         # Spark requires >= 1 partition per planned batch
-        return out or [CommitPartition(self.table_path, -1, [], [],
-                                       a.schema_json, "")]
+        return out or [part(-1, None)]
 
     def commit(self, end: dict) -> None:
         self._base = end["version"]
@@ -264,7 +191,8 @@ class TxLogChangesReader(DataSourceStreamReader):
     # ---- executor side: per-commit file diff ---------------------------
 
     def read(self, partition: CommitPartition):
-        if partition.version < 0:
+        plan = partition.plan
+        if plan is None:
             return
         import pandas as pd
         import pyarrow.parquet as pq
@@ -283,7 +211,7 @@ class TxLogChangesReader(DataSourceStreamReader):
         # NON-hive converted file's path carries no k=v segments at
         # all (r9 decoupling).  Pre-r9 manifests fall back to hive
         # path parsing.  Mirrors TxLogTable._read_files.
-        phys_type = {(partition.mapping or {}).get(f.name, f.name):
+        phys_type = {partition.mapping.get(f.name, f.name):
                      f.dataType.typeName() for f in fields}
 
         def load(rel_paths) -> "pd.DataFrame":
@@ -291,7 +219,7 @@ class TxLogChangesReader(DataSourceStreamReader):
             for p in rel_paths:
                 pdf = pq.read_table(
                     os.path.join(partition.table_path, p)).to_pandas()
-                tup = partition.parts.get(p)
+                tup = plan.parts.get(p)
                 if tup is None:
                     tup = {pc: _typed_part(raw, phys_type[pc])
                            for pc, raw in
@@ -329,25 +257,17 @@ class TxLogChangesReader(DataSourceStreamReader):
                     df[f.name] = pd.to_datetime(df[f.name], utc=True)
             return df
 
-        old, new = load(partition.removed), load(partition.added)
-        # deletion-vector context (mirrors TxLogTable.table_changes):
-        # drop rows never live at v-1 from the old side, add grown-DV
-        # before-images (dv-mode deletes change no files), drop rows
-        # not live at v from the new side
-        if partition.dv_old:
-            old = old[~old[key].isin(partition.dv_old)]
-        if partition.dv_grown:
-            g = load(partition.grown_files)
-            old = pd.concat(
-                [old, g[g[key].isin(partition.dv_grown)]],
-                ignore_index=True)
-        if partition.dv_new:
-            new = new[~new[key].isin(partition.dv_new)]
-        if partition.dv_shrunk:
-            s = load(partition.shrunk_files)
-            new = pd.concat(
-                [new, s[s[key].isin(partition.dv_shrunk)]],
-                ignore_index=True)
+        def side(s: ChangeSide) -> "pd.DataFrame":
+            df = load(s.files)
+            if s.drop:
+                df = df[~df[key].isin(s.drop)]
+            if s.extra_keys:
+                extra = load(s.extra_files)
+                df = pd.concat([df, extra[extra[key].isin(s.extra_keys)]],
+                               ignore_index=True)
+            return df
+
+        old, new = side(plan.old), side(plan.new)
         m = old.merge(new, on=key, how="outer",
                       suffixes=("_o", "_n"), indicator=True)
 

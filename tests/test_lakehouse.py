@@ -1007,30 +1007,52 @@ def test_optimize_zorder_single_file_not_skipped(spark, tdir):
     assert t.read().orderBy("user_id").collect() == before
 
 
-@pytest.mark.parametrize("cdf_seed", [7, 23])
-def test_stream_matches_batch_cdf_over_random_ops(spark, tdir, cdf_seed):
-    """The executor-side per-commit diff in TxLogChangesReader.read()
-    hand-mirrors TxLogTable.table_changes semantics (DV
-    old/new/grown/shrunk, null-safe compare, image shaping); this
-    property check pins the two implementations in lockstep over
-    randomized MERGE / COW-delete / DV-delete / OPTIMIZE / RESTORE
-    sequences — a future format action handled in
-    one but not the other fails here, not silently in production."""
+@pytest.mark.parametrize("cdf_seed, layout", [
+    pytest.param(7, "plain", id="7"),
+    pytest.param(23, "plain", id="23"),
+    pytest.param(7, "partitioned_mapped", id="7-partitioned-mapped")])
+def test_stream_matches_batch_cdf_over_random_ops(spark, tdir, cdf_seed,
+                                                   layout):
+    """Which files and DV keys form each commit's before- and
+    after-image is one shared rule, lakehouse._change_plan; only the
+    row diff over them is mirrored — a Spark join in
+    TxLogTable.table_changes, a pandas merge in
+    TxLogChangesReader.read() (null-safe compare, image shaping,
+    partition re-attach, column mapping).  This property check pins
+    the two row diffs in lockstep over randomized MERGE / COW-delete /
+    DV-delete / OPTIMIZE / RESTORE sequences, on a plain table and on
+    a partitioned table under column mapping — a case one engine
+    handles and the other does not fails here, not silently in
+    production."""
     import random
 
     from cdc_plg_spark.sources.txlog_stream import TxLogChangesSource
 
     spark.dataSource.register(TxLogChangesSource)
     rng = random.Random(cdf_seed)
-    t = make_table(spark, os.path.join(tdir, "t"), n=40, n_files=4)
+    path = os.path.join(tdir, "t")
+    if layout == "plain":
+        t = make_table(spark, path, n=40, n_files=4)
+        val = "value"
+    else:
+        df = spark.range(0, 40).select(
+            F.col("id").alias("user_id"), (F.col("id") * 2).alias("value"))
+        t = TxLogTable.create(spark, path, df, "user_id", n_files=4,
+                              partition_by=["bucket"],
+                              generated={"bucket": "user_id % 3"})
+        t.rename_column("value", "amount")
+        val = "amount"
+    floor = t.snapshot().version          # restores stay past the rename
     for _ in range(8):
         kind = rng.choices(("merge", "delete", "delete_dv", "optimize",
                             "restore"),
                            weights=(5, 1, 2, 1, 1))[0]
         if kind == "merge":
             keys = rng.sample(range(80), rng.randint(1, 6))
-            t.merge(src(spark, [(k, rng.randint(-99, 99), rng.choice("IUD"))
-                                for k in keys]), op_col="op")
+            t.merge(spark.createDataFrame(
+                [(k, rng.randint(-99, 99), rng.choice("IUD"))
+                 for k in keys], f"user_id long, {val} long, op string"),
+                op_col="op")
         elif kind in ("delete", "delete_dv"):
             lo = rng.randint(0, 70)
             t.delete_where((lo, lo + rng.randint(0, 15)),
@@ -1038,20 +1060,22 @@ def test_stream_matches_batch_cdf_over_random_ops(spark, tdir, cdf_seed):
         elif kind == "restore":
             # restore may SHRINK a deletion vector — the resurrection
             # diff case only RESTORE produces
-            t.restore(rng.randint(0, t.snapshot().version))
+            t.restore(rng.randint(floor, t.snapshot().version))
         else:
             t.optimize(target_files=2)
     head = t.snapshot().version
+    name = f"cdf_{cdf_seed}_{layout}"
     q = (spark.readStream.format("txlog_changes")
          .option("path", t.path).load()
-         .writeStream.format("memory").queryName(f"cdf_{cdf_seed}")
+         .writeStream.format("memory").queryName(name)
          .trigger(availableNow=True).start())
     q.awaitTermination(180)
+    cols = ["change_type"] + t.read().columns
     streamed = sorted(
-        (r["commit_version"], r["change_type"], r["user_id"], r["value"])
-        for r in spark.sql(f"SELECT * FROM cdf_{cdf_seed}").collect())
+        (r["commit_version"], *[r[c] for c in cols])
+        for r in spark.sql(f"SELECT * FROM {name}").collect())
     batch = sorted(
-        (r["_commit_version"], r["change_type"], r["user_id"], r["value"])
+        (r["_commit_version"], *[r[c] for c in cols])
         for r in t.table_changes_per_commit(0, head).collect())
     assert streamed == batch and len(streamed) > 0
 
@@ -1442,6 +1466,22 @@ def test_stream_max_commits_per_trigger_offsets(spark, tdir):
     r0 = TxLogChangesReader(t.path)
     r0.initialOffset()
     assert r0.latestOffset() == {"version": 5}
+
+
+def test_stream_source_rejects_non_table_path(tdir):
+    """schema(), initialOffset() and latestOffset() on a directory that
+    holds no TxLog table all raise the same ValueError."""
+    from cdc_plg_spark.sources.txlog_stream import (
+        TxLogChangesReader, TxLogChangesSource,
+    )
+
+    empty = os.path.join(tdir, "empty")
+    os.makedirs(empty)
+    for call in (lambda: TxLogChangesSource({"path": empty}).schema(),
+                 lambda: TxLogChangesReader(empty).initialOffset(),
+                 lambda: TxLogChangesReader(empty).latestOffset()):
+        with pytest.raises(ValueError, match="not a TxLog table"):
+            call()
 
 
 def test_stream_max_commits_bounds_catchup_batches(spark, tdir):

@@ -9,7 +9,10 @@ Contract under test:
   checkpoint load, a shallow clone and a log written with full-meta
   actions (the older writers' format) all yield the same metadata;
 - meta actions carry only the fields they change;
-- a commit replays the log for a checkpoint only when one is due.
+- a commit replays the log for a checkpoint only when one is due;
+- a MERGE that loses its publish to a concurrent append lands one
+  version later, and the losing attempt's files reach no manifest,
+  read, change feed or stream, and are reclaimed by VACUUM.
 """
 
 from __future__ import annotations
@@ -215,3 +218,61 @@ def test_no_checkpoint_past_a_floor_this_client_cannot_write(spark, tdir):
     assert not os.path.exists(os.path.join(t.log_dir,
                                            _ckpt_name(CHECKPOINT_EVERY)))
     assert t.snapshot().protocol == [1, 3]
+
+
+def test_lost_merge_race_orphans_stay_invisible_until_vacuum(spark, tdir):
+    from cdc_plg_spark.sources.txlog_stream import TxLogChangesSource
+
+    t = mk(spark, os.path.join(tdir, "t"))
+    v0 = t.snapshot().version
+    real = t._try_commit
+    lost = []
+
+    def racing(version, actions):
+        if not lost:
+            lost.extend(a["add"]["path"] for a in actions if "add" in a)
+            TxLogTable(spark, t.path).append(spark.createDataFrame(
+                [(500, 77, 500, "racer")],
+                "user_id long, value long, small int, tag string"))
+        return real(version, actions)
+
+    t._try_commit = racing
+    # a sparse update: `small` and `tag` are absent from the source, so
+    # the losing attempt (key 500 not in the table yet) inserts them
+    # NULL, while the retry (key 500 appended meanwhile) keeps the
+    # appended values — the two attempts' rows differ
+    r = t.merge(spark.createDataFrame(
+        [(500, 1, "U"), (5, -5, "U")], "user_id long, value long, op string"),
+        op_col="op", partial=True)
+    assert lost and r["version"] == v0 + 2
+    for v in t._versions():
+        assert not set(lost) & set(t.snapshot(v).files), v
+
+    def rows(df):
+        return {(x["user_id"], x["value"], x["small"], x["tag"])
+                for x in df.collect()}
+
+    import pyarrow.parquet as pq
+    written = {(x["user_id"], x["value"], x["small"], x["tag"])
+               for p in lost
+               for x in pq.read_table(os.path.join(t.path, p)).to_pylist()}
+    final = rows(t.read())
+    ghosts = written - final
+    assert (500, 1, None, None) in ghosts and (500, 1, 500, "racer") in final
+
+    spark.dataSource.register(TxLogChangesSource)
+    q = (spark.readStream.format("txlog_changes").option("path", t.path)
+         .load().writeStream.format("memory").queryName("lost_merge_feed")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    streamed = rows(spark.sql("SELECT * FROM lost_merge_feed"))
+    changed = rows(t.table_changes(v0, t.snapshot().version))
+    assert (500, 1, 500, "racer") in streamed & changed
+    assert not ghosts & (final | streamed | changed)
+
+    assert t.fsck(deep=True) == []
+    on_disk = [os.path.join(t.path, p) for p in lost]
+    assert all(map(os.path.exists, on_disk))
+    t.vacuum(retain_last=1, min_age_s=0)
+    assert not any(map(os.path.exists, on_disk))
+    assert rows(t.read()) == final
