@@ -1157,12 +1157,14 @@ class TxLogTable:
 
     def _snapshot_once(self, version: int | None = None) -> Snapshot:
         versions = self._versions()
-        if not versions:
+        if version is None and not versions:
             return Snapshot(version=-1)
         head = versions[-1] if version is None else version
         if head not in versions:
+            have = (f"have {versions[0]}..{versions[-1]}" if versions
+                    else "no log")
             raise ValueError(
-                f"version {head} not in log (have {versions[0]}..{versions[-1]}"
+                f"version {head} not in log ({have}"
                 f"; earlier versions may have been vacuumed)")
         snap = Snapshot(version=head)
         start = 0
@@ -1287,52 +1289,72 @@ class TxLogTable:
                        **_meta_of(snap)}, f)
         os.replace(tmp, os.path.join(self.log_dir, _ckpt_name(snap.version)))
 
-    def _publish(self, version: int, actions: list[dict]) -> bool:
-        """Publish `actions` as `version`, then write the checkpoint if
-        one is due.  False = lost the race."""
-        if not self._try_commit(version, actions):
-            return False
-        self._maybe_checkpoint(version)
-        return True
-
-    def _commit(self, op: str, build, attempts: int | None = 5) -> dict:
-        """The optimistic commit loop every retrying writer runs.  Each
-        attempt replays a fresh snapshot, checks the writer floor and
-        calls `build(snap)`, which returns one of:
-
-        - a dict: a finished early-out result (txn replay, no-op),
-          returned as is;
-        - None: retry on a fresh snapshot (a benign race seen before
-          publishing);
-        - `(actions, result)`: publish at snap.version + 1; a won race
-          returns {"version": snap.version + 1, **result}, a lost one
-          retries.
-
-        ALTERs and merge try `attempts` times; append passes None and
-        retries without bound, since appends never conflict on data.
-        A `build` that finds its previous attempt's read set
-        invalidated raises ConflictError itself."""
-        for _ in itertools.count() if attempts is None else range(attempts):
-            snap = self.snapshot()
-            self._assert_writer(snap)
-            out = build(snap)
-            if isinstance(out, dict):
-                return out
-            if out is not None and self._publish(snap.version + 1, out[0]):
-                return {"version": snap.version + 1, **out[1]}
-        raise ConflictError(f"{op} retries exhausted")
-
-    def _assert_writer(self, snap: Snapshot) -> None:
-        """Every mutator calls this on its working snapshot: a table
-        whose min_writer floor exceeds this client must stay readable
-        but reject ALL mutations (incl. vacuum — destroying files
-        under reachability rules a newer protocol may have changed is
-        the worst possible failure mode)."""
+    def _head(self, op: str, txn: tuple[str, int] | None = None
+              ) -> tuple[Snapshot, dict | None]:
+        """The guard every write starts from: the head snapshot of a
+        table this client may write.  A path with no log raises
+        ValueError; a min_writer floor above this client raises
+        UnsupportedProtocolError, so the table stays readable but
+        rejects ALL mutations (incl. vacuum — destroying files under
+        reachability rules a newer protocol may have changed is the
+        worst possible failure mode).  The second item is the result a
+        replayed `(app, epoch)` txn returns instead of writing, or None."""
+        snap = self.snapshot()
+        if snap.version < 0:
+            raise ValueError(f"{op} on non-existent table")
         if snap.protocol[1] > WRITER_VERSION:
             raise UnsupportedProtocolError(
                 f"table at {self.path!r} requires min_writer "
                 f"{snap.protocol[1]}; this client writes protocol "
                 f"{WRITER_VERSION} — reads still work")
+        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
+            return snap, {"version": snap.version, "skipped": True}
+        return snap, None
+
+    def _commit(self, op: str, build, txn: tuple[str, int] | None = None,
+                attempts: int | None = 5) -> dict:
+        """The one place a writer commits.  Each attempt:
+
+        1. takes the head snapshot through `_head`: a path that is not
+           a table raises ValueError, a writer floor above this client
+           UnsupportedProtocolError, and a replayed `txn` returns
+           {"version": head, "skipped": True} without calling `build`;
+        2. calls `build(snap)`, which returns one of
+           - a dict: a finished early-out result (no-op), returned as is;
+           - None: retry on a fresh snapshot (a benign race seen before
+             publishing);
+           - `(actions, result)`: the commit to publish;
+        3. appends the `{"txn": ...}` action last and publishes the
+           actions at snap.version + 1 (create-exclusive).  A won race
+           writes the checkpoint when one is due and returns
+           {"version": snap.version + 1, **result}; a lost one starts
+           the next attempt.
+
+        ALTERs, stamp_hashes and merge take the default 5 attempts;
+        append passes None and retries without bound, since appends
+        never conflict on data.  delete_where, restore, optimize and
+        repartition_layout pass 1: their data pass is not redone, and
+        a lost race goes back to the caller.  When the attempts run
+        out: ConflictError(f"{op} retries exhausted").  A `build` that
+        finds its previous attempt's read set invalidated raises
+        ConflictError itself."""
+        for _ in itertools.count() if attempts is None else range(attempts):
+            snap, skipped = self._head(op, txn)
+            if skipped is not None:
+                return skipped
+            out = build(snap)
+            if isinstance(out, dict):
+                return out
+            if out is None:
+                continue
+            actions, result = out
+            if txn is not None:
+                actions = [*actions,
+                           {"txn": {"app": txn[0], "epoch": txn[1]}}]
+            if self._try_commit(snap.version + 1, actions):
+                self._maybe_checkpoint(snap.version + 1)
+                return {"version": snap.version + 1, **result}
+        raise ConflictError(f"{op} retries exhausted")
 
     def upgrade_protocol(self, min_reader: int | None = None,
                          min_writer: int | None = None,
@@ -1349,8 +1371,6 @@ class TxLogTable:
         and for tests.  RESTORE never rewinds the protocol: restore's
         meta carries no protocol key, so replay keeps the floor."""
         def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("upgrade_protocol on non-existent table")
             cur_r, cur_w = snap.protocol
             new_r = cur_r if min_reader is None else min_reader
             new_w = cur_w if min_writer is None else min_writer
@@ -2424,10 +2444,9 @@ class TxLogTable:
 
     def append(self, df: DataFrame, n_files: int | None = None,
                txn: tuple[str, int] | None = None) -> dict:
-        snap = self.snapshot()
-        self._assert_writer(snap)
-        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-            return {"version": snap.version, "skipped": True}
+        snap, skipped = self._head("append", txn)
+        if skipped is not None:
+            return skipped
         df = _conform_types(
             df, StructType.fromJson(json.loads(snap.schema_json)).fields,
             "append source")
@@ -2479,13 +2498,11 @@ class TxLogTable:
 
         def build(s: Snapshot):
             # appends never conflict on data; a lost race takes the
-            # next slot — but recomputes BOTH txn idempotence and the
-            # schema-widening meta from the fresh snapshot: a
+            # next slot — but recomputes the schema-widening meta from
+            # the fresh snapshot (_commit re-checks the txn): a
             # concurrent commit may have widened the schema with
             # different columns, and re-publishing our stale meta
             # would silently drop them
-            if txn is not None and s.txns.get(txn[0], -1) >= txn[1]:
-                return {"version": s.version, "skipped": True}
             if (dict(s.mapping) if s.mapping else None) != mapping0:
                 # a concurrent RENAME/DROP changed the logical->physical
                 # mapping AFTER our files were written under the old
@@ -2496,11 +2513,9 @@ class TxLogTable:
             actions = [{"commit": {"op": "APPEND"}},
                        *([_meta_action(**changes)] if changes else []),
                        *adds]
-            if txn is not None:
-                actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
             return actions, {"files_added": len(adds), "skipped": False}
 
-        return self._commit("append", build, attempts=None)
+        return self._commit("append", build, txn, attempts=None)
 
     def rename_column(self, old: str, new: str) -> dict:
         """ALTER TABLE RENAME COLUMN — a pure META commit (the RFC's
@@ -2512,8 +2527,6 @@ class TxLogTable:
         that pinned the old schema need a restart (the §3.2 contract
         for non-additive DDL)."""
         def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("rename on non-existent table")
             fields = StructType.fromJson(json.loads(snap.schema_json)).fields
             names = [f_.name for f_ in fields]
             if old not in names:
@@ -2592,8 +2605,6 @@ class TxLogTable:
         from pyspark.sql.types import StructField, _parse_datatype_string
 
         def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("widen on non-existent table")
             fields = StructType.fromJson(
                 json.loads(snap.schema_json)).fields
             names = [f_.name for f_ in fields]
@@ -2729,8 +2740,6 @@ class TxLogTable:
                     f"default for {name!r} must be a constant "
                     f"expression castable to {dtype!r}: {e}") from None
         def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("add_column on non-existent table")
             fields = StructType.fromJson(
                 json.loads(snap.schema_json)).fields
             if name in [f_.name for f_ in fields]:
@@ -2767,8 +2776,6 @@ class TxLogTable:
             raise ValueError(f"constraint name {name!r} uses the "
                              f"reserved '_generated_' prefix")
         def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("add_check on non-existent table")
             if name in snap.checks:
                 raise ValueError(f"constraint {name!r} already exists")
             bad = (self._read_files_live(snap, sorted(snap.files))
@@ -2810,8 +2817,6 @@ class TxLogTable:
         contract.  Dropping the key column is refused (every format
         invariant hangs off it)."""
         def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("drop on non-existent table")
             if name == snap.key_col:
                 raise ValueError("cannot drop the key column")
             if snap.phys(name) in (snap.partition_by or []):
@@ -3003,8 +3008,6 @@ class TxLogTable:
         read_dvs: dict[str, list] = {}   # last attempt's candidates' DVs
 
         def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("merge into non-existent table")
             # after a lost race the retry is valid iff no candidate file
             # was removed AND no candidate file's deletion vector grew
             # (our rewrite read the old DV state — re-committing would
@@ -3016,8 +3019,6 @@ class TxLogTable:
                 raise ConflictError(
                     "concurrent commit removed or dv-deleted from a "
                     "candidate file")
-            if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-                return {"version": snap.version, "skipped": True}
             key = snap.key_col
             source_c = _conform_types(
                 source,
@@ -3169,8 +3170,6 @@ class TxLogTable:
                        *([_meta_action(**widening)] if widening else []),
                        *[{"remove": {"path": p}} for p in touched],
                        *adds]
-            if txn is not None:
-                actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
             read_dvs.clear()
             read_dvs.update((p, snap.files[p].get("dv", []))
                             for p in touched)
@@ -3178,7 +3177,7 @@ class TxLogTable:
                              "files_pruned": len(snap.files) - len(touched),
                              "files_added": len(adds), "skipped": False}
 
-        return self._commit("merge", build)
+        return self._commit("merge", build, txn)
 
     def _classify_pred_files(self, snap: Snapshot, where_between):
         """Classify live files against ANDed range predicates.
@@ -3302,84 +3301,80 @@ class TxLogTable:
         if (key_between is None) == (where_between is None):
             raise ValueError(
                 "pass exactly one of key_between / where_between")
-        snap = self.snapshot()
-        self._assert_writer(snap)
-        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-            return {"version": snap.version, "skipped": True,
-                    "files_dropped": 0, "files_rewritten": 0}
-        key = snap.key_col
-        if key_between is not None:
-            lo, hi = key_between
-            drop_whole = [p for p, s in snap.files.items()
-                          if s["min_key"] >= lo and s["max_key"] <= hi]
-            straddle = [p for p, s in snap.files.items()
-                        if p not in drop_whole
-                        and s["max_key"] >= lo and s["min_key"] <= hi]
-            match_cond = F.col(key).between(lo, hi)
-        else:
-            drop_whole, straddle, match_cond = \
-                self._classify_pred_files(snap, where_between)
-        actions = [{"commit": {"op": "DELETE", "mode": mode,
-                               "files_dropped": len(drop_whole),
-                               "files_rewritten":
-                                   0 if mode == "dv" else len(straddle)}},
-                   *[{"remove": {"path": p}} for p in drop_whole]]
-        if straddle and mode == "dv":
-            matched = (self._read_files_live(snap, straddle)
-                       .filter(match_cond)
-                       .select(F.input_file_name().alias("_f"), key))
-            n_match = matched.count()      # 1 scalar, executor-side
-            if n_match > dv_max_keys:
-                raise ValueError(
-                    f"dv delete matches {n_match} rows across "
-                    f"{len(straddle)} straddling files, over "
-                    f"dv_max_keys={dv_max_keys}: inline deletion "
-                    f"vectors must stay manifest-class (they ride the "
-                    f"log and the read-side broadcast).  Use "
-                    f"mode='cow' for bulk deletes, or raise the cap "
-                    f"deliberately if this table's readers can afford "
-                    f"it")
-            # one read-only job: which LIVE keys per straddler match
-            hit = matched.collect()  # DV-sized: cap-enforced above
-            by_file: dict[str, list] = {}
-            for r in hit:
-                full = _fs_path(r["_f"])
-                # manifest keys are rel paths for native files but
-                # ABSOLUTE for a shallow clone's out-of-root refs —
-                # relpath alone would produce '../src/...' and miss
-                # (found by the clone random-ops model walk, r9)
-                rel = (os.path.abspath(full) if os.path.abspath(full)
-                       in snap.files
-                       else os.path.relpath(full, self.path))
-                if rel not in snap.files:
-                    raise RuntimeError(
-                        f"dv delete resolved {rel!r} to no manifest "
-                        f"entry — path round-trip bug, refusing a "
-                        f"silent no-op delete")
-                by_file.setdefault(rel, []).append(r[key])
-            actions += [{"dv": {"path": p, "keys": sorted(ks)}}
-                        for p, ks in sorted(by_file.items())]
-        elif straddle:
-            # NULL predicate values never match BETWEEN, so ~coalesce
-            # keeps them (match_cond is already NULL-coalesced on the
-            # predicate path; the key path has no NULL keys by contract)
-            kept = (self._read_files_live(snap, straddle)
-                    .filter(~match_cond))
-            adds = self._write_data(
-                kept, key, len(straddle), mapping=snap.mapping,
-                partition_cols=snap.logical_partition_by(),
-                bloom_bits=snap.bloom_bits)
-            # deletes only remove rows; surviving rows were validated
-            # by the write that created them — no re-check needed
-            actions += [{"remove": {"path": p}} for p in straddle]
-            actions += adds
-        if txn is not None:
-            actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-        if not self._publish(snap.version + 1, actions):
-            raise ConflictError("concurrent commit during delete")
-        return {"version": snap.version + 1, "skipped": False,
-                "files_dropped": len(drop_whole),
-                "files_rewritten": 0 if mode == "dv" else len(straddle)}
+
+        def build(snap: Snapshot):
+            key = snap.key_col
+            if key_between is not None:
+                lo, hi = key_between
+                drop_whole = [p for p, s in snap.files.items()
+                              if s["min_key"] >= lo and s["max_key"] <= hi]
+                straddle = [p for p, s in snap.files.items()
+                            if p not in drop_whole
+                            and s["max_key"] >= lo and s["min_key"] <= hi]
+                match_cond = F.col(key).between(lo, hi)
+            else:
+                drop_whole, straddle, match_cond = \
+                    self._classify_pred_files(snap, where_between)
+            actions = [{"commit": {"op": "DELETE", "mode": mode,
+                                   "files_dropped": len(drop_whole),
+                                   "files_rewritten":
+                                       0 if mode == "dv" else len(straddle)}},
+                       *[{"remove": {"path": p}} for p in drop_whole]]
+            if straddle and mode == "dv":
+                matched = (self._read_files_live(snap, straddle)
+                           .filter(match_cond)
+                           .select(F.input_file_name().alias("_f"), key))
+                n_match = matched.count()      # 1 scalar, executor-side
+                if n_match > dv_max_keys:
+                    raise ValueError(
+                        f"dv delete matches {n_match} rows across "
+                        f"{len(straddle)} straddling files, over "
+                        f"dv_max_keys={dv_max_keys}: inline deletion "
+                        f"vectors must stay manifest-class (they ride the "
+                        f"log and the read-side broadcast).  Use "
+                        f"mode='cow' for bulk deletes, or raise the cap "
+                        f"deliberately if this table's readers can afford "
+                        f"it")
+                # one read-only job: which LIVE keys per straddler match
+                hit = matched.collect()  # DV-sized: cap-enforced above
+                by_file: dict[str, list] = {}
+                for r in hit:
+                    full = _fs_path(r["_f"])
+                    # manifest keys are rel paths for native files but
+                    # ABSOLUTE for a shallow clone's out-of-root refs —
+                    # relpath alone would produce '../src/...' and miss
+                    # (found by the clone random-ops model walk, r9)
+                    rel = (os.path.abspath(full) if os.path.abspath(full)
+                           in snap.files
+                           else os.path.relpath(full, self.path))
+                    if rel not in snap.files:
+                        raise RuntimeError(
+                            f"dv delete resolved {rel!r} to no manifest "
+                            f"entry — path round-trip bug, refusing a "
+                            f"silent no-op delete")
+                    by_file.setdefault(rel, []).append(r[key])
+                actions += [{"dv": {"path": p, "keys": sorted(ks)}}
+                            for p, ks in sorted(by_file.items())]
+            elif straddle:
+                # NULL predicate values never match BETWEEN, so ~coalesce
+                # keeps them (match_cond is already NULL-coalesced on the
+                # predicate path; the key path has no NULL keys by contract)
+                kept = (self._read_files_live(snap, straddle)
+                        .filter(~match_cond))
+                adds = self._write_data(
+                    kept, key, len(straddle), mapping=snap.mapping,
+                    partition_cols=snap.logical_partition_by(),
+                    bloom_bits=snap.bloom_bits)
+                # deletes only remove rows; surviving rows were validated
+                # by the write that created them — no re-check needed
+                actions += [{"remove": {"path": p}} for p in straddle]
+                actions += adds
+            return actions, {"skipped": False,
+                             "files_dropped": len(drop_whole),
+                             "files_rewritten":
+                                 0 if mode == "dv" else len(straddle)}
+
+        return self._commit("delete", build, txn, attempts=1)
 
     def restore(self, version: int | None = None,
                 txn: tuple[str, int] | None = None,
@@ -3416,62 +3411,54 @@ class TxLogTable:
             raise ValueError("pass exactly one of version / as_of")
         if as_of is not None:
             version = self.version_at(as_of)
-        snap = self.snapshot()
-        self._assert_writer(snap)
-        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-            return {"version": snap.version, "skipped": True,
-                    "files_removed": 0, "files_restored": 0}
-        old = self.snapshot(version)   # raises if log-truncated
-        if old.schema_json is None:
-            raise ValueError(f"version {version} has no schema "
-                             f"(not a table snapshot)")
-        missing = [p for p, s in old.files.items()
-                   if not os.path.exists(self._abs(p))
-                   or (s.get("bloom")
-                       and not os.path.exists(self._abs(p) + ".bloom"))]
-        if missing:
-            raise ValueError(
-                f"cannot restore to version {version}: {len(missing)} "
-                f"file(s) (or bloom sidecars) vacuumed, "
-                f"e.g. {missing[0]!r}")
-        # layout markers and content-hash seals survive restore: the
-        # bytes on disk are untouched, so the seal stays valid (mtimes
-        # are NOT carried — _try_commit re-stamps from the live file)
-        readds = _readd_actions(sorted(old.files.items()), _MTIME_KEYS)
-        # the whole meta rewinds — defaults with the schema they belong
-        # to — except: the protocol (no key, so replay keeps the
-        # floor), retired physical names (a name that was ever live
-        # stays reserved unless the target makes it live again; an
-        # unmapped target takes the identity mapping so that later
-        # column adds route around them) and root ownership (ever
-        # owned stays owned)
-        def mapping_of(s: Snapshot) -> dict[str, str]:
-            if s.mapping is not None:
-                return s.mapping
-            return {f_["name"]: f_["name"]
-                    for f_ in json.loads(s.schema_json)["fields"]}
 
-        retired = sorted({*snap.retired, *old.retired,
-                          *mapping_of(snap).values()}
-                         - set(mapping_of(old).values()))
-        meta = _meta_of(_dc_replace(
-            old, retired=retired,
-            mapping=mapping_of(old) if retired else old.mapping,
-            owns_root=snap.owns_root or old.owns_root))
-        del meta["protocol"]
-        actions = [{"commit": {"op": "RESTORE", "to_version": version,
-                               "files_removed": len(snap.files),
-                               "files_restored": len(old.files)}},
-                   {"meta": meta},
-                   *[{"remove": {"path": p}} for p in snap.files],
-                   *readds]
-        if txn is not None:
-            actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-        if not self._publish(snap.version + 1, actions):
-            raise ConflictError("concurrent commit during restore")
-        return {"version": snap.version + 1, "skipped": False,
-                "files_removed": len(snap.files),
-                "files_restored": len(old.files)}
+        def build(snap: Snapshot):
+            old = self.snapshot(version)   # raises if log-truncated
+            missing = [p for p, s in old.files.items()
+                       if not os.path.exists(self._abs(p))
+                       or (s.get("bloom")
+                           and not os.path.exists(self._abs(p) + ".bloom"))]
+            if missing:
+                raise ValueError(
+                    f"cannot restore to version {version}: {len(missing)} "
+                    f"file(s) (or bloom sidecars) vacuumed, "
+                    f"e.g. {missing[0]!r}")
+            # layout markers and content-hash seals survive restore: the
+            # bytes on disk are untouched, so the seal stays valid (mtimes
+            # are NOT carried — _try_commit re-stamps from the live file)
+            readds = _readd_actions(sorted(old.files.items()), _MTIME_KEYS)
+            # the whole meta rewinds — defaults with the schema they belong
+            # to — except: the protocol (no key, so replay keeps the
+            # floor), retired physical names (a name that was ever live
+            # stays reserved unless the target makes it live again; an
+            # unmapped target takes the identity mapping so that later
+            # column adds route around them) and root ownership (ever
+            # owned stays owned)
+            def mapping_of(s: Snapshot) -> dict[str, str]:
+                if s.mapping is not None:
+                    return s.mapping
+                return {f_["name"]: f_["name"]
+                        for f_ in json.loads(s.schema_json)["fields"]}
+
+            retired = sorted({*snap.retired, *old.retired,
+                              *mapping_of(snap).values()}
+                             - set(mapping_of(old).values()))
+            meta = _meta_of(_dc_replace(
+                old, retired=retired,
+                mapping=mapping_of(old) if retired else old.mapping,
+                owns_root=snap.owns_root or old.owns_root))
+            del meta["protocol"]
+            actions = [{"commit": {"op": "RESTORE", "to_version": version,
+                                   "files_removed": len(snap.files),
+                                   "files_restored": len(old.files)}},
+                       {"meta": meta},
+                       *[{"remove": {"path": p}} for p in snap.files],
+                       *readds]
+            return actions, {"skipped": False,
+                             "files_removed": len(snap.files),
+                             "files_restored": len(old.files)}
+
+        return self._commit("restore", build, txn, attempts=1)
 
     def clone(self, dest: str, version: int | None = None,
               deep: bool = False) -> "TxLogTable":
@@ -3738,95 +3725,85 @@ class TxLogTable:
         cadence where doubling the read cost is a real tax — enable
         it at audit cadence or on tables where a layout flake has
         been observed."""
-        snap = self.snapshot()
-        self._assert_writer(snap)
-        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-            return {"version": snap.version, "files_compacted": 0,
-                    "skipped": True}
-        if zorder_by is not None:
-            small = sorted(snap.files)
-        else:
-            small = sorted(p for p, s in snap.files.items()
-                           if s["bytes"] < small_bytes or s.get("dv"))
-        has_dv = any(snap.files[p].get("dv") for p in small)
-        # an explicit ZORDER request always rewrites (a 1-file table
-        # can still need re-clustering); the small-file early-out only
-        # applies to plain bin-packing OPTIMIZE
-        if len(small) < 2 and not has_dv and zorder_by is None:
-            return {"version": snap.version, "files_compacted": 0,
-                    "skipped": True}
-        if not small:
-            return {"version": snap.version, "files_compacted": 0,
-                    "skipped": True}
-        total = sum(snap.files[p]["bytes"] for p in small)
-        n_out = target_files or max(1, total // max(small_bytes, 1) + 1)
-        df = self._read_files_live(snap, small)
-        cluster = None
-        if zorder_by is not None:
-            from cdc_plg_spark.operators.maintenance import _Z_BITS
-            zcols = list(zorder_by)
-            if not 2 <= len(zcols) <= 7:
-                raise ValueError(
-                    f"zorder_by takes 2-7 columns ({_Z_BITS} bits "
-                    f"each in the 64-bit z-value), got {zcols}")
-            hi = (1 << _Z_BITS) - 1
-            # temporal z-columns cluster on their integer stat domain
-            # (epoch micros/days): datetime arithmetic has no division,
-            # and this keeps the layout aligned with the stats the
-            # read path prunes on
-            zx = {c: _stat_col(df, c) for c in zcols}
-            b = df.agg(*[f_ for c in zcols
-                         for f_ in (F.min(zx[c]).alias(f"_lo_{c}"),
-                                    F.max(zx[c]).alias(f"_hi_{c}"))]
-                       ).collect()[0]   # 1 row: normalization bounds
+        def build(snap: Snapshot):
+            if zorder_by is not None:
+                small = sorted(snap.files)
+            else:
+                small = sorted(p for p, s in snap.files.items()
+                               if s["bytes"] < small_bytes or s.get("dv"))
+            has_dv = any(snap.files[p].get("dv") for p in small)
+            # an explicit ZORDER request always rewrites (a 1-file table
+            # can still need re-clustering); the small-file early-out only
+            # applies to plain bin-packing OPTIMIZE
+            if not small or (len(small) < 2 and not has_dv
+                             and zorder_by is None):
+                return {"version": snap.version, "files_compacted": 0,
+                        "skipped": True}
+            total = sum(snap.files[p]["bytes"] for p in small)
+            n_out = target_files or max(1, total // max(small_bytes, 1) + 1)
+            df = self._read_files_live(snap, small)
+            cluster = None
+            if zorder_by is not None:
+                from cdc_plg_spark.operators.maintenance import _Z_BITS
+                zcols = list(zorder_by)
+                if not 2 <= len(zcols) <= 7:
+                    raise ValueError(
+                        f"zorder_by takes 2-7 columns ({_Z_BITS} bits "
+                        f"each in the 64-bit z-value), got {zcols}")
+                hi = (1 << _Z_BITS) - 1
+                # temporal z-columns cluster on their integer stat domain
+                # (epoch micros/days): datetime arithmetic has no division,
+                # and this keeps the layout aligned with the stats the
+                # read path prunes on
+                zx = {c: _stat_col(df, c) for c in zcols}
+                b = df.agg(*[f_ for c in zcols
+                             for f_ in (F.min(zx[c]).alias(f"_lo_{c}"),
+                                        F.max(zx[c]).alias(f"_hi_{c}"))]
+                           ).collect()[0]   # 1 row: normalization bounds
 
-            def norm(c, lo, h_):
-                span = float((h_ - lo) + 1) if h_ is not None else 1.0
-                return (F.floor(hi * (zx[c] - F.lit(lo)) / F.lit(span))
-                        .cast("long"))
+                def norm(c, lo, h_):
+                    span = float((h_ - lo) + 1) if h_ is not None else 1.0
+                    return (F.floor(hi * (zx[c] - F.lit(lo)) / F.lit(span))
+                            .cast("long"))
 
-            norms = [norm(c, b[f"_lo_{c}"], b[f"_hi_{c}"])
-                     for c in zcols]
-            n = len(norms)
-            cluster = F.lit(0)   # Morton interleave, pure Column algebra
-            for i in range(_Z_BITS):
-                for j, nx in enumerate(norms):
-                    cluster = cluster + F.shiftleft(
-                        F.shiftright(nx, i).bitwiseAND(F.lit(1)),
-                        n * i + j)
-        adds = self._write_data(df, snap.key_col, n_out, cluster,
-                                mapping=snap.mapping,
-                                partition_cols=snap.logical_partition_by(),
-                                bloom_bits=snap.bloom_bits)
-        if verify and adds:
-            self._verify_layout_rewrite(df, snap, adds, "OPTIMIZE")
-        if reseal is None:
-            reseal = any("sha256" in s for s in snap.files.values())
-        if reseal and adds:
-            paths = [self._abs(a["add"]["path"]) for a in adds]
-            paths += [self._abs(a["add"]["path"]) + ".bloom"
-                      for a in adds if "bloom" in a["add"]]
-            hashes = self._hash_files(paths)
-            for a in adds:
-                full = self._abs(a["add"]["path"])
-                if hashes.get(full) is not None:
-                    a["add"]["sha256"] = hashes[full]
-                side_h = hashes.get(full + ".bloom")
-                if "bloom" in a["add"] and side_h is not None:
-                    a["add"]["bloom_sha256"] = side_h
-        actions = [{"commit": {"op": "OPTIMIZE",
-                               "zorder_by": list(zorder_by or ()),
-                               "files_compacted": len(small),
-                               "files_out": len(adds)}},
-                   *[{"remove": {"path": p}} for p in small],
-                   *adds]
-        if txn is not None:
-            actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-        if not self._publish(snap.version + 1, actions):
-            raise ConflictError("concurrent commit during optimize")
-        return {"version": snap.version + 1,
-                "files_compacted": len(small), "files_out": len(adds),
-                "skipped": False}
+                norms = [norm(c, b[f"_lo_{c}"], b[f"_hi_{c}"])
+                         for c in zcols]
+                n = len(norms)
+                cluster = F.lit(0)   # Morton interleave, pure Column algebra
+                for i in range(_Z_BITS):
+                    for j, nx in enumerate(norms):
+                        cluster = cluster + F.shiftleft(
+                            F.shiftright(nx, i).bitwiseAND(F.lit(1)),
+                            n * i + j)
+            adds = self._write_data(df, snap.key_col, n_out, cluster,
+                                    mapping=snap.mapping,
+                                    partition_cols=snap.logical_partition_by(),
+                                    bloom_bits=snap.bloom_bits)
+            if verify and adds:
+                self._verify_layout_rewrite(df, snap, adds, "OPTIMIZE")
+            if (any("sha256" in s for s in snap.files.values())
+                    if reseal is None else reseal) and adds:
+                paths = [self._abs(a["add"]["path"]) for a in adds]
+                paths += [self._abs(a["add"]["path"]) + ".bloom"
+                          for a in adds if "bloom" in a["add"]]
+                hashes = self._hash_files(paths)
+                for a in adds:
+                    full = self._abs(a["add"]["path"])
+                    if hashes.get(full) is not None:
+                        a["add"]["sha256"] = hashes[full]
+                    side_h = hashes.get(full + ".bloom")
+                    if "bloom" in a["add"] and side_h is not None:
+                        a["add"]["bloom_sha256"] = side_h
+            actions = [{"commit": {"op": "OPTIMIZE",
+                                   "zorder_by": list(zorder_by or ()),
+                                   "files_compacted": len(small),
+                                   "files_out": len(adds)}},
+                       *[{"remove": {"path": p}} for p in small],
+                       *adds]
+            return actions, {"files_compacted": len(small),
+                             "files_out": len(adds), "skipped": False}
+
+        return self._commit("optimize", build, txn, attempts=1)
 
     def repartition_layout(self, partition_by: list[str] | None,
                            target_files: int | None = None,
@@ -3854,49 +3831,41 @@ class TxLogTable:
         mismatch raises LayoutInvariantViolation and nothing commits
         (~2x the rewrite's read cost, acceptable on an op already
         priced O(table); pass False to skip)."""
-        snap = self.snapshot()
-        self._assert_writer(snap)
-        if snap.version < 0:
-            raise ValueError("repartition on non-existent table")
-        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-            return {"version": snap.version, "skipped": True}
-        new_pb = list(partition_by or [])
-        fields = {f_.name: f_ for f_ in StructType.fromJson(
-            json.loads(snap.schema_json)).fields}
-        for pc in new_pb:
-            if pc not in fields:
-                raise ValueError(f"partition column {pc!r} not in "
-                                 f"schema {sorted(fields)}")
-            if pc == snap.key_col:
-                raise ValueError(
-                    f"key column {pc!r} cannot be a partition column")
-            pt = fields[pc].dataType.typeName()
-            if pt not in _PART_TYPES:
-                raise ValueError(
-                    f"partition column {pc!r} has type {pt}; hive "
-                    f"path encoding round-trips only {_PART_TYPES}")
-        phys_pb = [snap.phys(c) for c in new_pb]
-        if phys_pb == (snap.partition_by or []):
-            return {"version": snap.version, "skipped": True}
-        df = self._read_files_live(snap, sorted(snap.files))
-        adds = self._write_data(
-            df, snap.key_col, target_files or max(1, len(snap.files)),
-            mapping=snap.mapping, partition_cols=new_pb,
-            bloom_bits=snap.bloom_bits)
-        if verify and adds:
-            self._verify_layout_rewrite(df, snap, adds, "REPARTITION")
-        actions = [{"commit": {"op": "REPARTITION",
-                               "partition_by": phys_pb}},
-                   _meta_action(partition_by=phys_pb or None),
-                   *[{"remove": {"path": p}} for p in snap.files],
-                   *adds]
-        if txn is not None:
-            actions.append({"txn": {"app": txn[0], "epoch": txn[1]}})
-        if not self._publish(snap.version + 1, actions):
-            raise ConflictError("concurrent commit during repartition")
-        return {"version": snap.version + 1,
-                "files_rewritten": len(snap.files),
-                "files_out": len(adds), "skipped": False}
+        def build(snap: Snapshot):
+            new_pb = list(partition_by or [])
+            fields = {f_.name: f_ for f_ in StructType.fromJson(
+                json.loads(snap.schema_json)).fields}
+            for pc in new_pb:
+                if pc not in fields:
+                    raise ValueError(f"partition column {pc!r} not in "
+                                     f"schema {sorted(fields)}")
+                if pc == snap.key_col:
+                    raise ValueError(
+                        f"key column {pc!r} cannot be a partition column")
+                pt = fields[pc].dataType.typeName()
+                if pt not in _PART_TYPES:
+                    raise ValueError(
+                        f"partition column {pc!r} has type {pt}; hive "
+                        f"path encoding round-trips only {_PART_TYPES}")
+            phys_pb = [snap.phys(c) for c in new_pb]
+            if phys_pb == (snap.partition_by or []):
+                return {"version": snap.version, "skipped": True}
+            df = self._read_files_live(snap, sorted(snap.files))
+            adds = self._write_data(
+                df, snap.key_col, target_files or max(1, len(snap.files)),
+                mapping=snap.mapping, partition_cols=new_pb,
+                bloom_bits=snap.bloom_bits)
+            if verify and adds:
+                self._verify_layout_rewrite(df, snap, adds, "REPARTITION")
+            actions = [{"commit": {"op": "REPARTITION",
+                                   "partition_by": phys_pb}},
+                       _meta_action(partition_by=phys_pb or None),
+                       *[{"remove": {"path": p}} for p in snap.files],
+                       *adds]
+            return actions, {"files_rewritten": len(snap.files),
+                             "files_out": len(adds), "skipped": False}
+
+        return self._commit("repartition", build, txn, attempts=1)
 
     def vacuum(self, retain_last: int = 2,
                min_age_s: float = 3600.0,
@@ -3917,16 +3886,14 @@ class TxLogTable:
         BEFORE the commit that references it, so a concurrent writer's
         fresh files look exactly like orphans until its commit
         publishes.  Files younger than the threshold are never
-        deleted (the public Delta VACUUM retention-period rule —
+        deleted, nor are younger empty directories this run did not
+        empty (the public Delta VACUUM retention-period rule —
         default there is 7 days; pass 0 only when no writer can be
         mid-commit, e.g. tests)."""
         import time
 
+        self._head("vacuum")
         versions = self._versions()
-        if versions:
-            # writer-gated: an old client must never unlink files
-            # whose reachability a newer protocol may define differently
-            self._assert_writer(self.snapshot())
         keep = versions[-retain_last:]
         reachable: set[str] = set()
         owns_root = False
@@ -3973,6 +3940,10 @@ class TxLogTable:
                                 removed += 1
                     except FileNotFoundError:
                         pass
+        # an empty directory goes only when this sweep emptied it or it
+        # is older than the cutoff: an in-flight writer creates its task
+        # directories before the files in them
+        emptied: set[str] = set()
         for subdir in sweep:
             # bottom-up walk: hive-partitioned writes nest files under
             # k=v directories (arbitrary depth for multi-column
@@ -3990,11 +3961,15 @@ class TxLogTable:
                             else:
                                 os.unlink(full)
                                 removed += 1
+                                emptied.add(d)
                     except FileNotFoundError:
                         pass    # concurrent vacuum got there first
                 try:
-                    if not dry_run and not os.listdir(d):
+                    if (not dry_run and not os.listdir(d)
+                            and (d in emptied
+                                 or os.path.getmtime(d) <= cutoff)):
                         os.rmdir(d)
+                        emptied.add(os.path.dirname(d))
                 except OSError:
                     pass        # raced with a writer or another vacuum
         horizon = keep[0]
@@ -4076,8 +4051,6 @@ class TxLogTable:
         O(files).  Run it after bulk loads or on a schedule, not per
         commit."""
         def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("stamp_hashes on non-existent table")
             live = sorted(snap.files.items())
             if not live:
                 return {"version": snap.version, "skipped": True,

@@ -734,9 +734,10 @@ def test_concurrent_dv_deletes_race_merges(spark, tdir):
 
 def test_vacuum_retention_protects_inflight_writes(spark, tdir):
     """A concurrent writer's data lands BEFORE its commit references
-    it; default vacuum must treat young unreachable files as possibly
-    in-flight and leave them, so the writer's later commit stays
-    valid.  min_age_s=0 removes them (the test/maintenance opt-out)."""
+    it; default vacuum must treat young unreachable files, and young
+    empty directories, as possibly in-flight and leave them, so the
+    writer's later commit stays valid.  min_age_s=0 removes them (the
+    test/maintenance opt-out)."""
     t = make_table(spark, os.path.join(tdir, "t"), n=100, n_files=2)
     t.merge(src(spark, [(1, -1, "U")]), op_col="op")
     # simulate a mid-commit writer: parquet on disk, commit not yet
@@ -747,11 +748,16 @@ def test_vacuum_retention_protects_inflight_writes(spark, tdir):
     n_orphans = sum(1 for f in os.listdir(orphan_dir)
                     if f.endswith(".parquet"))
     assert n_orphans > 0
+    # its task directories exist, still empty, before the files in them
+    task_dir = os.path.join(t.path, "data", "inflight_task", "_temporary")
+    os.makedirs(os.path.join(task_dir, "0", "k=v"))
     vm = t.vacuum(retain_last=1)          # default 1h retention
     assert all(os.path.exists(os.path.join(orphan_dir, f))
                for f in os.listdir(orphan_dir))
+    assert os.path.isdir(os.path.join(task_dir, "0", "k=v"))
     vm0 = t.vacuum(retain_last=1, min_age_s=0)
     assert not os.path.isdir(orphan_dir)  # now collected
+    assert not os.path.isdir(os.path.dirname(task_dir))
     assert vm0["data_files_removed"] >= n_orphans
 
 

@@ -1,10 +1,18 @@
 """The commit path every TxLogTable writer shares.
 
+Every writer commits through `TxLogTable._commit`, which alone checks
+that the path is a table, the writer floor and the `(app, epoch)` txn.
+
 Contract under test:
 - every retrying ALTER (and stamp_hashes) survives one lost commit race
   by re-running against the fresh snapshot — landing at the next
   version without dropping the concurrent writer's change — and raises
-  ConflictError once its attempts run out;
+  ConflictError once its attempts run out; the one-shot writers
+  (delete_where, restore, optimize, repartition_layout) raise it after
+  their single lost race; either way the version stays put;
+- every writer, vacuum included, refuses a path with no log with a
+  ValueError, writes no log there and deletes no file; `snapshot(v)`
+  of such a path raises for any explicit version;
 - the metadata table covers every Snapshot metadata field, and replay,
   checkpoint load, a shallow clone and a log written with full-meta
   actions (the older writers' format) all yield the same metadata;
@@ -101,15 +109,57 @@ def test_alter_retries_after_one_lost_race(spark, tdir, op):
     assert landed(snap)
 
 
-@pytest.mark.parametrize("op", sorted(ALTERS))
+# the writers that publish once: a lost race goes back to the caller
+ONE_SHOT = {
+    "delete_where": lambda t: t.delete_where(key_between=(3, 3)),
+    "restore": lambda t: t.restore(version=0),
+    "optimize": lambda t: t.optimize(),
+    "repartition_layout": lambda t: t.repartition_layout(["tag"]),
+}
+CALLS = {**{op: call for op, (call, _) in ALTERS.items()}, **ONE_SHOT}
+
+
+@pytest.mark.parametrize("op", sorted(CALLS))
 def test_alter_raises_when_every_race_is_lost(spark, tdir, op):
-    call, _ = ALTERS[op]
+    call = CALLS[op]
     t = mk(spark, os.path.join(tdir, "t"), checks={"pre": "user_id >= 0"})
     v0 = t.snapshot().version
     t._try_commit = lambda version, actions: False
     with pytest.raises(ConflictError, match="retries exhausted"):
         call(t)
     assert t.snapshot().version == v0
+
+
+WRITERS = {
+    **CALLS,
+    "append": lambda t: t.append(t.spark.range(1).select(
+        F.col("id").alias("user_id"))),
+    "merge": lambda t: t.merge(t.spark.range(1).select(
+        F.col("id").alias("user_id"))),
+    "vacuum": lambda t: t.vacuum(retain_last=1, min_age_s=0),
+    "vacuum_dry_run": lambda t: t.vacuum(min_age_s=0, dry_run=True),
+}
+
+
+@pytest.mark.parametrize("op", sorted(WRITERS))
+def test_writer_refuses_a_path_that_is_not_a_table(spark, tdir, op):
+    stray = os.path.join(tdir, "data", "x", "a.parquet")
+    os.makedirs(os.path.dirname(stray))
+    spark.range(3).toPandas().to_parquet(stray)
+    os.utime(stray, (0, 0))
+    t = TxLogTable(spark, tdir)
+    with pytest.raises(ValueError, match="non-existent table"):
+        WRITERS[op](t)
+    assert not os.path.exists(t.log_dir)
+    assert os.path.exists(stray)
+
+
+def test_snapshot_of_a_missing_version_raises_without_a_log(spark, tdir):
+    t = TxLogTable(spark, tdir)
+    assert t.snapshot().version == -1
+    for v in (0, 5):
+        with pytest.raises(ValueError, match=f"version {v} not in log"):
+            t.snapshot(v)
 
 
 def test_meta_table_covers_every_snapshot_field():

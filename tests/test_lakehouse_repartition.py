@@ -15,7 +15,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_plg_spark.lakehouse import TxLogTable
+from cdc_plg_spark.lakehouse import ConflictError, TxLogTable
 
 
 @pytest.fixture()
@@ -171,7 +171,7 @@ def test_repartition_loses_race_to_concurrent_commit(spark, tdir):
     assert t._try_commit(snap.version + 1,
                          [{"commit": {"op": "DELETE"}},
                           {"remove": {"path": victim}}])
-    with pytest.raises(Exception, match="concurrent"):
+    with pytest.raises(ConflictError, match="repartition retries exhausted"):
         # evolution computed against the stale snapshot — the slot is
         # taken, the single-attempt contract (like OPTIMIZE) raises
         t_stale = TxLogTable(t.spark, t.path)
