@@ -14,8 +14,20 @@ groups:
   INT64 µs writes because INT96 columns carry no statistics.
 - BUILD_DEFAULTS are choices for sessions `get_spark` builds: Arrow on,
   a 64 MB broadcast threshold, the RocksDB state store (per-key state
-  off the JVM heap), no UI, and a driver heap sized to the box.  A
-  foreign session keeps its own values for these.
+  off the JVM heap), no UI, a generated-class cache that holds the
+  engine's working set, and a driver heap sized to the box.  A foreign
+  session keeps its own values for these.  The cache is sized because
+  the engine serves the same queries over and over in one session:
+  perfbench's 23 `analytics_mix` ids generate about 270 whole-stage
+  codegen classes, and with Spark's default cache of 100 entries every
+  warm pass over them recompiled 264 (about 11 per query).  At 500
+  entries a warm pass recompiles 0 to 9, and the mix ran ~40% more
+  queries per second; at 250 it still recompiled ~135, and 1000 or
+  2000 were within noise of 500.  The cached classes cost metaspace.
+  The key is a static conf, read once per JVM when the codegen cache is
+  first built, so it holds only where `get_spark` starts the JVM: a
+  foreign session keeps Spark's 100, and `ensure_session_confs` cannot
+  set it.
 
 `spark.sql.shuffle.partitions` is filled from the core count
 (`defaultParallelism`) when a session has no value, and never changed
@@ -68,6 +80,8 @@ BUILD_DEFAULTS: dict[str, str] = {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
     "spark.ui.enabled": "false",
+    # above the ~270 generated classes of a repeated query mix (Spark: 100)
+    "spark.sql.codegen.cache.maxEntries": "500",
     # half of physical memory, capped at 8g
     "spark.driver.memory": f"{min(phys_mem_bytes() // 2**21, 8192)}m",
 }
